@@ -1167,7 +1167,10 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    """exact word-3-gram Jaccard over candidate pairs."""
+    """exact word-unigram (n=1) set Jaccard over every pair of the first
+    60 documents, kept where jaccard >= 0.2. The exhaustive pair set keeps
+    the row small and oracle-replayable; production candidates come from
+    LSH (dedup_minhash_lsh)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
     a = docs.select(F.col("doc_id").alias("id_a"))
     b = docs.select(F.col("doc_id").alias("id_b"))
@@ -1230,7 +1233,7 @@ def q_webtext_extract(spark, sf_dir):
     runs via the JVM codegen engine. The DuckDB oracle rebuilds the
     identical markup and replays the identical pattern sequence (the
     very constants webtext.STRIP_STEPS/ENTITY_STEPS/WS_STEPS), so three
-    engines agree byte-for-byte: JVM here, pandas/Arrow in
+    engines agree byte-for-byte: JVM here, the fused Arrow/RE2 path in
     tests/test_webtext.py, RE2 in the oracle."""
     from fluent_bit_spark import webtext
 
@@ -1734,9 +1737,9 @@ def q_skew_distinct(spark, sf_dir):
     estimates bit-replayable in DuckDB (the xxhash64 scale engine is
     the same plan, different hash — pytest asserts its accuracy and
     merge law). n = occupied registers / k_used; v = estimate
-    rounded 4 (exact-integer harmonic sums, so the one double
-    division matches cross-engine; estimates emitted UNROUNDED — same
-    route ⇒ bit-equal doubles, and round() is where engines diverge).
+    (exact-integer harmonic sums, so the one double division matches
+    cross-engine; estimates emitted UNROUNDED — same route ⇒ bit-equal
+    doubles, and round() is where engines diverge).
 
     mode 'cms' — Count-Min frequency sketch (w=256, d=4) probed for
     every user: key = user_id, n = the sketch estimate (min over d

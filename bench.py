@@ -80,18 +80,16 @@ _DIMS_CACHE: dict = {}
 
 def run_webgen_e2e(spark: SparkSession, n_rows: int) -> dict:
     """The north-rule job: extract text from the binary ``html`` column
-    (webtext, byte-identical per url across engines), parse the embedded
+    (webtext, byte-identical per url to the JVM path), parse the embedded
     access-log line out of the extracted bytes, filter, enrich
     (broadcast), tag, route to sinks, count per sink — one pass, no
     driver loops. Input comes from parquet (scan stage), exactly like
     the production Iceberg source."""
-    from fluent_bit_spark import webtext
     from fluent_bit_spark.pipeline import (
         DEFAULT_SINKS,
         enrich_stage,
         extract_parse_stage,
         filter_stage,
-        parse_stage,
         tag_stage,
     )
     from fluent_bit_spark.router import route_flags
@@ -115,16 +113,10 @@ def run_webgen_e2e(spark: SparkSession, n_rows: int) -> dict:
     prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     pages = spark.read.parquet(path).drop("text")  # force the html path
-    engine = os.environ.get("SPARK_GRAFT_PARSER_ENGINE", "pandas")
-    ext_engine = os.environ.get("SPARK_GRAFT_EXTRACT_ENGINE", "fused")
-    if ext_engine == "fused":
-        # one JVM->Python->JVM crossing for extract+parse (the default;
-        # measured table in BENCH.md round 3); the routing job never
-        # re-reads the body, so the wide text columns stay in the worker
-        stage_out = extract_parse_stage(pages, include_text=False)
-    else:
-        extracted = webtext.extract_stage(pages, engine=ext_engine, keep_html=False)
-        stage_out = parse_stage(extracted, engine=engine, text_col="text_extracted")
+    # one JVM->Python->JVM crossing for extract+parse (measured table in
+    # BENCH.md round 3); the routing job never re-reads the body, so the
+    # wide text columns stay in the worker
+    stage_out = extract_parse_stage(pages, include_text=False)
     # dimension rows collect once per session (plugin-init analogue,
     # pipeline.load_enrich_dims) — repeated runs reuse them
     from fluent_bit_spark.pipeline import load_enrich_dims
@@ -222,20 +214,16 @@ def main():
     n_docs = int(os.environ.get("SPARK_GRAFT_WEBROWS", str(int(30_000_000 * sf_num))))
     prepare_webgen_input(spark, n_docs)
 
-    # Core accounting for the pandas/Arrow engines: each Spark task
+    # Core accounting for the fused Arrow crossing: each Spark task
     # drives a separate python worker, so local[K] occupies ~2K cores.
     # At K = all hardware cores that is the saturation regime BENCH.md
     # documents (12.9-115.8s spread on identical runs). Cap the webgen
-    # session at hw/2 cores when any python-side engine runs so task +
-    # worker fit. Engine defaults (measured, BENCH.md round-3 table):
-    # fused arrow extract+parse (one python crossing) beats
-    # arrow+pandas 270k, all-pandas 158k, and all-JVM 91k docs/s
-    # (java.util.regex loses to RE2 on this workload).
-    engine = os.environ.get("SPARK_GRAFT_PARSER_ENGINE", "pandas")
-    ext_engine = os.environ.get("SPARK_GRAFT_EXTRACT_ENGINE", "fused")
+    # session at hw/2 cores so task + worker fit. Fused arrow
+    # extract+parse (one python crossing) beat arrow+pandas 270k,
+    # all-pandas 158k, and all-JVM 91k docs/s (BENCH.md round-3 table;
+    # java.util.regex loses to RE2 on this workload).
     hw = os.cpu_count() or cpus
-    python_side = engine == "pandas" or ext_engine in ("pandas", "arrow", "fused")
-    webgen_cpus = min(cpus, max(4, hw // 2)) if python_side else cpus
+    webgen_cpus = min(cpus, max(4, hw // 2))
     if webgen_cpus != cpus:
         spark.stop()
         spark = build_spark(webgen_cpus)

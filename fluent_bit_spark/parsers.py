@@ -16,17 +16,20 @@ Shared semantics (src/flb_parser_regex.c:44-113 ``cb_results``):
   parsed into the record timestamp and removed unless ``time_keep``;
   an unparseable time drops the key and leaves the timestamp unset.
 
-Execution strategy (Spark-first):
-* **jvm** engine (default): each named group becomes one
-  ``F.regexp_extract(col, pattern, group_index)`` — the pattern is
-  compiled once, names are stripped to indices driver-side, and the whole
-  parse stays inside whole-stage codegen. Exactly equivalent to the
-  reference under the default ``skip_empty_values=true`` (where ""-valued
-  and non-participating keys are both dropped).
-* **pandas** engine: a vectorized Arrow-batched UDF using
-  ``pd.Series.str.extract`` which distinguishes non-participating groups
-  (NaN) from empty matches ("") — needed only when
-  ``skip_empty_values=false``.
+Execution strategy (Spark-first): ``RegexParser.apply`` picks the path
+from the parser itself, there is no engine switch.
+* ``skip_empty_values=true`` (the default): names are stripped to group
+  indices driver-side and the whole parse stays inside whole-stage
+  codegen (one packed ``regexp_replace`` pass, or one
+  ``regexp_extract`` per group). Exactly equivalent to the reference,
+  where ""-valued and non-participating keys are both dropped.
+* ``skip_empty_values=false``: an Arrow-batched pandas UDF using
+  ``pd.Series.str.extract``, which tells a non-participating group
+  (null) from an empty match (""). Java's ``regexp_extract``/``$n``
+  return "" for both, so this is the one input the JVM path cannot
+  express.
+* ``webtext.extract_parse_arrow`` runs the same regex fused with html
+  extraction in one ``mapInArrow`` crossing (skip_empty_values only).
 """
 
 from __future__ import annotations
@@ -248,7 +251,6 @@ class RegexParser:
     time_offset: Optional[str] = None
     types: Sequence[TypeCast] = field(default_factory=tuple)
     skip_empty_values: bool = True
-    engine: str = "jvm"  # 'jvm' | 'pandas'
 
     def group_names(self) -> list[str]:
         return _NAMED_GROUP.findall(
@@ -271,14 +273,17 @@ class RegexParser:
         Missing keys surface as SQL NULL (never ""): under the default
         skip_empty_values, ""-captures are nulled out too, matching the
         reference's key-drop (cb_results, flb_parser_regex.c:57-60).
+        With skip_empty_values off, an empty capture stays "" and only a
+        non-participating group is NULL — the pandas path, since the
+        JVM regex returns "" for both.
         """
         names = self.group_names()
         src = F.col(source_col)
 
-        if self.engine == "jvm":
+        if self.skip_empty_values:
             df, cols = self._jvm_extract(df, src, names)
         else:
-            cols = self._pandas_extract(df, src, names)
+            cols = self._pandas_extract(src, names)
 
         return self.finish(
             df, cols, ts_col=ts_col, prefix=prefix, assume_year=assume_year
@@ -295,9 +300,9 @@ class RegexParser:
     ) -> DataFrame:
         """Post-extraction half of :meth:`apply` — time lookup
         (cb_results time_key branch), type casts, column projection.
-        Shared by both engines and by the fused extraction+parse path
-        (webtext.extract_parse_arrow), whose group columns arrive as real
-        columns rather than expressions."""
+        Shared by both extraction paths and by the fused extraction+parse
+        path (webtext.extract_parse_arrow), whose group columns arrive as
+        real columns rather than expressions."""
         names = self.group_names()
         out = df
         if self.time_fmt is not None and self.time_key in names:
@@ -343,6 +348,8 @@ class RegexParser:
         branches are never hoisted) and re-run the regex per field.
         Rows containing the sentinel fall back lazily to per-group
         extraction; non-anchored patterns always use the per-group path.
+        ""-captures (empty or non-participating) become NULL: the
+        skip_empty_values key-drop this path is chosen for.
         """
         stripped, name_to_idx = strip_names(self.regex)
         row_matches = src.rlike(stripped)
@@ -369,25 +376,23 @@ class RegexParser:
         else:
             for nm in names:
                 cols[nm] = slow(nm)
-        if self.skip_empty_values:
-            cols = {
-                nm: F.when(c == "", F.lit(None)).otherwise(c) for nm, c in cols.items()
-            }
+        cols = {
+            nm: F.when(c == "", F.lit(None)).otherwise(c) for nm, c in cols.items()
+        }
         return df, cols
 
-    def _pandas_extract(self, df: DataFrame, src: Column, names: list[str]) -> dict[str, Column]:
+    def _pandas_extract(self, src: Column, names: list[str]) -> dict[str, Column]:
+        """skip_empty_values=false: python re reports a non-participating
+        group as NaN (-> NULL) and an empty capture as "", the reference's
+        key-absent vs empty-value distinction."""
         pat = onig_to_python(self.regex)
-        skip_empty = self.skip_empty_values
         fields = ", ".join(f"`{n}` string" for n in names)
 
         @pandas_udf(f"struct<{fields}>")
         def extract(s: pd.Series) -> pd.DataFrame:
             rx = re.compile(pat)
             res = s.str.extract(rx, expand=True)
-            res = res.reindex(columns=names)
-            if skip_empty:
-                res = res.where(res != "", other=None)
-            return res
+            return res.reindex(columns=names)
 
         struct = extract(src)
         return {n: struct.getField(n) for n in names}

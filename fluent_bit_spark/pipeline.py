@@ -76,11 +76,15 @@ class PipelineResult:
     manifest_path: str
 
 
+ENGINES = ("jvm", "fused")
+
+
 def parse_stage(
     pages: DataFrame, engine: str = "jvm", text_col: str = "text"
 ) -> DataFrame:
     """Extract the embedded access-log line from ``text_col`` and parse it
-    with the apache parser (conf/parsers.conf:2-7). Pure narrow ops.
+    with the apache parser (conf/parsers.conf:2-7). Pure narrow ops: the
+    single-pass pack-and-split regexp inside whole-stage codegen.
 
     ``text_col`` may be the source table's ``text`` column or
     ``text_extracted`` from :func:`webtext.extract_stage` — the full
@@ -88,18 +92,11 @@ def parse_stage(
     first and parses the extracted bytes (the two are byte-identical per
     url modulo the title line; test_webtext roundtrip).
 
-    engine — 'jvm' (single-pass pack-and-split regexp, whole-stage
-    codegen; default) or 'pandas' (Arrow-batched pd.Series.str.extract —
-    the vectorized-UDF path of BASELINE.json's input_hint; same output,
-    used when Onigmo-only constructs or ""-vs-missing distinction
-    matter). Both engines are golden-tested byte-identical per url."""
-    import dataclasses
-
-    parser = APACHE if engine == "jvm" else dataclasses.replace(APACHE, engine=engine)
+    engine — only 'jvm'; any other value raises ValueError."""
+    if engine != "jvm":
+        raise ValueError(f"parse_stage engine must be 'jvm', got {engine!r}")
     line = F.regexp_extract(F.col(text_col), r"\nLOG ([^\n]+)", 1)
-    df = pages.withColumn("line", line)
-    df = parser.apply(df, "line", ts_col="log_ts")
-    return df
+    return APACHE.apply(pages.withColumn("line", line), "line", ts_col="log_ts")
 
 
 def extract_parse_stage(
@@ -216,6 +213,28 @@ def tag_stage(df: DataFrame) -> DataFrame:
     return apply_rewrite_tag(df, list(REWRITE_RULES))
 
 
+def process_stages(
+    spark: SparkSession, pages: DataFrame, engine: str = "jvm"
+) -> DataFrame:
+    """parse -> filter -> enrich -> tag: everything before routing, shared
+    by the batch (:func:`run_pipeline`) and streaming
+    (streaming.run_pipeline_stream) entrypoints.
+
+    engine — 'jvm' parses the source ``text`` column (the
+    DuckDB-replayable reference); 'fused' runs the north-rule shape:
+    html->text extraction + parse in one Arrow crossing
+    (:func:`extract_parse_stage`) off the binary ``html`` column, source
+    ``text`` ignored. Any other value raises ValueError."""
+    if engine == "fused":
+        src = pages.drop("text") if "text" in pages.columns else pages
+        stage_out = extract_parse_stage(src)
+    elif engine == "jvm":
+        stage_out = parse_stage(pages)
+    else:
+        raise ValueError(f"engine must be one of {ENGINES}, got {engine!r}")
+    return tag_stage(enrich_stage(filter_stage(stage_out), geo_dict(spark), lang_dict(spark)))
+
+
 def metrics_query(df: DataFrame) -> DataFrame:
     """The stream-processor aggregation leg (out_counter/log_to_metrics
     analogue): tumbling 1-minute per-class counts + byte sums."""
@@ -244,21 +263,11 @@ def run_pipeline(
     coalesce_output: Optional[int] = None,
     engine: str = "jvm",
 ) -> PipelineResult:
-    """engine — 'jvm'/'pandas' parse the source ``text`` column;
-    'fused' runs the north-rule shape: html->text extraction + parse in
-    one Arrow crossing (extract_parse_stage) off the binary ``html``
-    column, source ``text`` ignored. Sinks then carry the extracted
-    text/title alongside the parsed fields."""
+    """engine — see :func:`process_stages` ('jvm' or 'fused'). With
+    'fused' the sinks carry the extracted text/title alongside the
+    parsed fields."""
     t0 = time.time()
-    geo = geo_dict(spark)
-    langs = lang_dict(spark)
-
-    if engine == "fused":
-        src = pages.drop("text") if "text" in pages.columns else pages
-        stage_out = extract_parse_stage(src)
-    else:
-        stage_out = parse_stage(pages, engine=engine)
-    parsed = tag_stage(enrich_stage(filter_stage(stage_out), geo, langs))
+    parsed = process_stages(spark, pages, engine)
 
     flagged = route_flags(parsed, sinks).persist()
     try:

@@ -156,7 +156,8 @@ def sessionize_stream(
     single open session per key. Out-of-order arrivals ACROSS batches
     earlier than the open session's last event extend it (never reopen
     a closed one) — the no-watermark tradeoff, documented here rather
-    than hidden.
+    than hidden. Events with a null ``ts_col`` have no event time and
+    are dropped; a key seen only with null timestamps keeps no state.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -198,19 +199,26 @@ def sessionize_stream(
             start_us = None
             last_us = 0
             n = 0
+        # one global sort across every Arrow chunk of this batch:
+        # applyInPandasWithState delivers a group as ~10k-row chunks in
+        # arbitrary shuffle order, and a per-chunk sort would close
+        # sessions prematurely. Null timestamps carry no event time and
+        # are dropped (an int64 cast of a null would fail the query).
+        us_all = sorted(
+            int(us) for pdf in pdfs for us in pdf["__us"].dropna().astype("int64")
+        )
+        if not us_all and start_us is None:
+            return
         closed = []
-        for pdf in pdfs:
-            us_sorted = pdf["__us"].astype("int64").sort_values()
-            for us in us_sorted:
-                us = int(us)
-                if start_us is None:
-                    start_us, last_us, n = us, us, 1
-                elif us - last_us >= gap_us:
-                    closed.append((start_us, last_us, n))
-                    start_us, last_us, n = us, us, 1
-                else:
-                    last_us = max(last_us, us)
-                    n += 1
+        for us in us_all:
+            if start_us is None:
+                start_us, last_us, n = us, us, 1
+            elif us - last_us >= gap_us:
+                closed.append((start_us, last_us, n))
+                start_us, last_us, n = us, us, 1
+            else:
+                last_us = max(last_us, us)
+                n += 1
         state.update((int(start_us), int(last_us), int(n)))
         state.setTimeoutDuration(idle_timeout_ms)
         if closed:

@@ -26,9 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .pipeline import enrich_stage, filter_stage, parse_stage, tag_stage
+from .pipeline import filter_stage, parse_stage, process_stages
 from .router import SinkSpec, route_flags
-from .webgen import geo_dict, lang_dict
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -82,21 +81,12 @@ def run_pipeline_stream(
     checkpoint_dir resumes from the recorded file offsets (in_tail's
     offset db semantics) — already-processed input is never re-routed.
 
-    engine='fused' runs the north-rule shape on the stream: html->text
+    engine — see pipeline.process_stages: 'fused' runs html->text
     extraction + parse in one Arrow crossing (mapInArrow is supported
-    on streaming frames); 'jvm'/'pandas' parse the source text column.
+    on streaming frames); 'jvm' parses the source text column.
     """
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    geo = geo_dict(spark)
-    langs = lang_dict(spark)
-    if engine == "fused":
-        from .pipeline import extract_parse_stage
-
-        src = pages.drop("text") if "text" in pages.columns else pages
-        stage_out = extract_parse_stage(src)
-    else:
-        stage_out = parse_stage(pages, engine=engine)
-    parsed = tag_stage(enrich_stage(filter_stage(stage_out), geo, langs))
+    parsed = process_stages(spark, pages, engine)
 
     sink_list = list(sinks)
     route_cols = [f"__route_{s.name}" for s in sink_list]

@@ -4,18 +4,19 @@ BASELINE.json's input_hint carries Common-Crawl-style pages as
 ``(url string, warc_ts timestamp, html binary, text string, lang
 string)`` and demands "byte-identical extracted text per url" from
 "vectorized pandas/Arrow UDFs ... over the binary html/text columns".
-This module is that extraction step, with TWO engines that are
-golden-tested byte-identical (the same contract as parsers.RegexParser):
+This module is that extraction step, with TWO paths that are
+golden-tested byte-identical:
 
-* ``engine='jvm'`` — a chain of ``regexp_replace`` Catalyst expressions
-  (whole-stage codegen, zero Python) — the default/fast path.
-* ``engine='pandas'`` — an Arrow-batched pandas UDF applying the SAME
-  normative regex sequence via ``pd.Series.str.replace`` — the
-  input_hint's vectorized-UDF path, and the place a real deployment
-  would swap in trafilatura/bs4 per batch.
+* **jvm** (:func:`extract_stage`, :func:`html_to_text`) — a chain of
+  ``regexp_replace`` Catalyst expressions (whole-stage codegen, zero
+  Python): the reference path the DuckDB oracle replays.
+* **fused** (:func:`extract_parse_arrow`) — the same normative regex
+  sequence as ``pyarrow.compute`` RE2 chains inside ONE ``mapInArrow``
+  crossing that also runs the regex parse: the production path, and
+  the place a real deployment would swap in trafilatura/bs4 per batch.
 
 The extraction spec is deliberately deterministic and closed (so three
-independent implementations — JVM, pandas, and the DuckDB oracle —
+independent implementations — JVM, Arrow/RE2, and the DuckDB oracle —
 agree byte-for-byte):
 
   0. a NULL html value is the empty document (text "", title "",
@@ -58,7 +59,6 @@ lines.
 from __future__ import annotations
 
 import re
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,7 +66,7 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 # The normative extraction sequence: (pattern, replacement) pairs applied
 # in order. Patterns are valid and equivalent in java.util.regex (Spark),
-# python re (pandas engine), and RE2 (DuckDB oracle).
+# python re, and RE2 (the fused pyarrow path and the DuckDB oracle).
 # ---------------------------------------------------------------------------
 
 def _ci(word: str) -> str:
@@ -102,9 +102,9 @@ _BLOCK_CLOSERS = "|".join(
 # CHANGE for pathologically interleaved blocks: leftmost-first
 # alternation instead of script-pass-then-style-pass (e.g.
 # '<style>a<script>b</style>c</script>' now keeps 'c', not 'a'). The
-# constants are the single normative source all three engines + the
+# constants are the single normative source both paths + the
 # DuckDB oracle replay, so the change lands everywhere at once
-# (goldens + 3-engine byte-identity tests pin it). Measured 6->3
+# (goldens + jvm-vs-fused byte-identity tests pin it). Measured 6->3
 # passes = -17% e2e extraction wall time at 3M docs.
 STRIP_STEPS: list[tuple[str, str]] = [
     (
@@ -144,15 +144,15 @@ WS_STEPS: list[tuple[str, str]] = [
 
 # Final normative step: trim this exact character set from both ends.
 # Kept OUT of WS_STEPS so each engine can use its native trim (F.btrim /
-# pd.str.strip / pc.utf8_trim / DuckDB trim) — mathematically identical
+# pc.utf8_trim / DuckDB trim) — mathematically identical
 # to the anchored-regex strip and ~7x faster than running it as a regex.
 TRIM_CHARS = " \t\r\n\f"
 
 
 def _html_str(col: Column) -> Column:
     """binary -> UTF-8 string; NULL html is the empty document (spec
-    step 0) so every engine yields text=""/title=""/n_links=0 instead of
-    engine-dependent null propagation (jvm null vs pandas fillna).
+    step 0) so both paths yield text=""/title=""/n_links=0 instead of
+    propagating null.
 
     Lossy decode (spec step 1): CAST(binary AS STRING) reinterprets the
     bytes (never throws — unlike ANSI ``decode``, which fails the task
@@ -250,14 +250,14 @@ def normalize_url(url: Column) -> Column:
     ).otherwise(base)
 
 
-# Shared python-engine pattern literals (python re + RE2 dialect; the
-# JVM engine keeps its java.util.regex (?<t>...) form inline).
+# Fused-path pattern literals (python re + RE2 dialect; the JVM path
+# keeps its java.util.regex (?<t>...) form inline).
 TITLE_PAT = r"(?s)<" + _ci("title") + r"[^>]*>(?P<t>.*?)</" + _ci("title")
 HREF_PAT = _ci("href") + r'[ \t]*=[ \t]*"[^"]*"'
 
 
 def _make_arrow_decoder():
-    """Returns the arrow-engine UTF-8 decode step (spec step 1), built
+    """Returns the fused path's UTF-8 decode step (spec step 1), built
     as a local function so mapInArrow closures serialize it BY VALUE —
     workers keep needing no package import beyond the captured steps.
 
@@ -305,154 +305,6 @@ def _out_schema_fields(df: DataFrame, html_col: str, keep_html: bool) -> list[st
     ]
 
 
-def html_to_text_pandas(
-    df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text_extracted",
-    title_col: Optional[str] = "title",
-    links_col: Optional[str] = "n_links",
-    keep_html: bool = True,
-) -> DataFrame:
-    """pandas/Arrow engine: the same spec via vectorized
-    ``pd.Series.str.replace`` inside ``mapInPandas``. One Arrow batch in,
-    one out; no per-row Python. Byte-identical to :func:`html_to_text`
-    (test_webtext golden + property tests).
-
-    Adds ``out_col`` (and optionally title/link-count columns) to `df`.
-    This is the seam where a production pipeline swaps in a real
-    extractor (trafilatura etc.) per batch without touching the plan.
-    """
-    import pandas as pd  # noqa: F401
-
-    _require_html_col(df, html_col)
-    schema_fields = _out_schema_fields(df, html_col, keep_html)
-    schema_fields.append(f"{out_col} string")
-    if title_col:
-        schema_fields.append(f"{title_col} string")
-    if links_col:
-        schema_fields.append(f"{links_col} int")
-    out_schema = ", ".join(schema_fields)
-
-    strip_steps = list(STRIP_STEPS)
-    entity_steps = list(ENTITY_STEPS)
-    ws_steps = list(WS_STEPS)
-    title_pat, href_pat, trim_chars = TITLE_PAT, HREF_PAT, TRIM_CHARS
-
-    def run(batches):
-        import re
-
-        for pdf in batches:
-            raw = pdf[html_col]
-            # spec step 1: lossy decode (maximal-subpart U+FFFD), same
-            # bytes-in/chars-out as the JVM engine's make_valid_utf8
-            s = raw.map(
-                lambda b: b.decode("utf-8", "replace")
-                if isinstance(b, (bytes, bytearray))
-                else b
-            ).astype("string")
-            s = s.fillna("")  # spec step 0: NULL html = empty document
-            if title_col:
-                t = s.str.extract(title_pat, expand=False)
-                t = t.fillna("")
-                for lit, rep in entity_steps:
-                    t = t.str.replace(lit, rep, regex=False)
-                for pat, rep in ws_steps:
-                    t = t.str.replace(pat, rep, regex=True)
-                t = t.str.strip(trim_chars)
-            if links_col:
-                n = s.str.count(href_pat)
-            for pat, rep in strip_steps:
-                s = s.str.replace(pat, rep, regex=True)
-            for lit, rep in entity_steps:
-                s = s.str.replace(lit, rep, regex=False)
-            for pat, rep in ws_steps:
-                s = s.str.replace(pat, rep, regex=True)
-            s = s.str.strip(trim_chars)
-            out = pdf.copy() if keep_html else pdf.drop(columns=[html_col])
-            out[out_col] = s.astype(object)
-            if title_col:
-                out[title_col] = t.astype(object)
-            if links_col:
-                out[links_col] = n.fillna(0).astype("int32")
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def html_to_text_arrow(
-    df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text_extracted",
-    title_col: Optional[str] = "title",
-    links_col: Optional[str] = "n_links",
-    keep_html: bool = True,
-) -> DataFrame:
-    """Arrow/RE2 engine: the same normative spec via
-    ``pyarrow.compute.replace_substring_regex`` chains inside
-    ``mapInArrow`` — no pandas materialization, RE2 regex execution
-    (measured 2.0x over the pandas engine on the same batch; the
-    patterns are RE2-safe by construction because the DuckDB oracle
-    already replays them through RE2). Byte-identical to the other two
-    engines (test_webtext)."""
-    import pyarrow as pa  # noqa: F401
-
-    _require_html_col(df, html_col)
-    schema_fields = _out_schema_fields(df, html_col, keep_html)
-    schema_fields.append(f"{out_col} string")
-    if title_col:
-        schema_fields.append(f"{title_col} string")
-    if links_col:
-        schema_fields.append(f"{links_col} int")
-    out_schema = ", ".join(schema_fields)
-
-    strip_steps = list(STRIP_STEPS)
-    entity_steps = list(ENTITY_STEPS)
-    ws_steps = list(WS_STEPS)
-    title_pat, href_pat, trim_chars = TITLE_PAT, HREF_PAT, TRIM_CHARS
-    decode_utf8 = _make_arrow_decoder()
-
-    def run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def chain(a):
-            for pat, rep in strip_steps:
-                a = pc.replace_substring_regex(a, pattern=pat, replacement=rep)
-            return entity_ws(a)
-
-        def entity_ws(a):
-            for lit, rep in entity_steps:
-                a = pc.replace_substring(a, pattern=lit, replacement=rep)
-            for pat, rep in ws_steps:
-                a = pc.replace_substring_regex(a, pattern=pat, replacement=rep)
-            return pc.utf8_trim(a, characters=trim_chars)
-
-        for batch in batches:
-            idx = batch.schema.get_field_index(html_col)
-            raw = batch.column(idx)
-            s = decode_utf8(raw, pa, pc)  # spec step 1: lossy decode
-            s = pc.fill_null(s, "")  # spec step 0: NULL html = empty doc
-            names, arrays = [], []
-            for i, f in enumerate(batch.schema):
-                if keep_html or f.name != html_col:
-                    names.append(f.name)
-                    arrays.append(batch.column(i))
-            names.append(out_col)
-            arrays.append(chain(s))
-            if title_col:
-                t = pc.struct_field(pc.extract_regex(s, title_pat), "t")
-                names.append(title_col)
-                arrays.append(entity_ws(pc.fill_null(t, "")))
-            if links_col:
-                names.append(links_col)
-                arrays.append(
-                    pc.cast(pc.count_substring_regex(s, pattern=href_pat), pa.int32())
-                )
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.mapInArrow(run, schema=out_schema)
-
-
 def extract_parse_arrow(
     df: DataFrame,
     parser,
@@ -478,22 +330,23 @@ def extract_parse_arrow(
     the Python->JVM Arrow traffic (the n_links count column is kept —
     it's 4 bytes).
 
-    Running :func:`extract_stage` and then ``RegexParser.apply`` as
-    separate python-side operators costs TWO JVM<->Python Arrow hops per
-    task (extract worker -> JVM -> parse worker); the extracted text —
-    the widest column in the frame — is serialized twice. At 10^12 rows
-    that inter-stage serialization is pure overhead and it is what
-    capped webgen scaling efficiency at 0.69 (BENCH.md round-3 fused
-    table). This operator runs the full normative extraction spec AND
-    the parser's RE2-compatible regex in the same batch loop, so one
-    worker per task touches the bytes exactly once.
+    Running extraction and the regex parse as separate python-side
+    operators costs TWO JVM<->Python Arrow hops per task (extract worker
+    -> JVM -> parse worker); the extracted text — the widest column in
+    the frame — is serialized twice. At 10^12 rows that inter-stage
+    serialization is pure overhead and it is what capped webgen scaling
+    efficiency at 0.69 (BENCH.md round-3 fused table). This operator
+    runs the full normative extraction spec AND the parser's
+    RE2-compatible regex in the same batch loop, so one worker per task
+    touches the bytes exactly once.
 
     Group captures come back as plain string columns (RE2 named-group
     extraction via ``pc.extract_regex``; ""-captures nulled to match the
     reference's skip_empty key-drop, flb_parser_regex.c:57-60). Time
     lookup + type casts stay JVM-side via ``parser.finish`` — they're
-    cheap codegen expressions. Byte-identical to the unfused path
-    (test_webtext fused-equivalence test).
+    cheap codegen expressions. Byte-identical to the JVM reference path,
+    ``parse_stage(extract_stage(...))`` (test_webtext fused-equivalence
+    test).
     """
     from .parsers import onig_to_python
 
@@ -501,9 +354,10 @@ def extract_parse_arrow(
     pat = onig_to_python(parser.regex)  # (?P<n>...) — RE2-compatible
     skip_empty = parser.skip_empty_values
     if not skip_empty:
-        # RE2 yields "" for a non-participating optional group where
-        # java.util.regex yields null; only the skip_empty nulling makes
-        # the two engines value-identical. Refuse rather than diverge.
+        # RE2 yields "" for a non-participating optional group, the same
+        # as an empty capture; only the skip_empty nulling makes both
+        # mean "no key". Refuse rather than diverge from the reference's
+        # null-vs-"" distinction (RegexParser.apply keeps it).
         raise ValueError(
             "extract_parse_arrow requires parser.skip_empty_values=True "
             "(RE2 ''-vs-null divergence on optional groups otherwise)"
@@ -536,7 +390,7 @@ def extract_parse_arrow(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        # same RE2 chains as html_to_text_arrow, captured per-closure so
+        # the RE2 entity/whitespace chain, captured per-closure so
         # workers need no package import beyond the serialized steps
         def entity_ws(a):
             for lit, rep in entity_steps:
@@ -597,20 +451,17 @@ def extract_stage(
     keep_html: bool = True,
 ) -> DataFrame:
     """Pipeline-stage wrapper: adds text_extracted / title / n_links via
-    the chosen engine. Both engines produce byte-identical columns.
+    the JVM codegen regexp_replace chain — the reference the fused
+    :func:`extract_parse_arrow` is byte-identical to (test_webtext).
 
     ``keep_html=False`` drops the binary column at the extraction seam —
-    at 10^12 rows the html body dominates row width, so the pandas
-    engine skips shipping it back over Arrow and the JVM plan prunes it
-    from every later stage.
+    at 10^12 rows the html body dominates row width, and the JVM plan
+    prunes it from every later stage.
 
-    engine — 'jvm' (codegen regexp_replace chain), 'pandas'
-    (mapInPandas + pd.Series.str.replace), or 'arrow' (mapInArrow +
-    pyarrow.compute RE2 chains; skips the pandas materialization)."""
-    if engine == "pandas":
-        return html_to_text_pandas(df, html_col=html_col, keep_html=keep_html)
-    if engine == "arrow":
-        return html_to_text_arrow(df, html_col=html_col, keep_html=keep_html)
+    engine — only 'jvm' (the fused path is :func:`extract_parse_arrow`);
+    any other value raises ValueError."""
+    if engine != "jvm":
+        raise ValueError(f"extract_stage engine must be 'jvm', got {engine!r}")
     html = F.col(html_col)
     out = (
         df.withColumn("text_extracted", html_to_text(html))

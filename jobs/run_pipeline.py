@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from fluent_bit_spark.pipeline import ENGINES, run_pipeline
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -36,10 +38,10 @@ def main() -> None:
     ap.add_argument("--generate", type=int, default=0,
                     help="generate N synthetic docs instead of reading --input")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--engine", default="fused", choices=["fused", "jvm", "pandas"],
+    ap.add_argument("--engine", default="fused", choices=ENGINES,
                     help="fused = html->text extraction + parse in one Arrow "
-                         "crossing (north-rule default); jvm/pandas parse the "
-                         "source text column")
+                         "crossing (north-rule default); jvm = the reference "
+                         "path, parsing the source text column")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--stream", action="store_true",
                     help="run the Structured-Streaming deployment shape "
@@ -63,7 +65,6 @@ def main() -> None:
         builder = builder.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
     spark = builder.getOrCreate()
 
-    from fluent_bit_spark.pipeline import run_pipeline
     from fluent_bit_spark.webgen import generate
 
     if args.stream:

@@ -8,6 +8,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running test (deselect with '-m \"not slow\"')"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = (

@@ -116,11 +116,14 @@ CASES = [
 @pytest.mark.parametrize("engine", ["jvm", "pandas"])
 @pytest.mark.parametrize("name,line,want,want_ts", CASES, ids=[c[0] for c in CASES])
 def test_parser_corpus_golden(spark, name, line, want, want_ts, engine):
-    """Both parse engines must extract byte-identical values per line —
-    the north rule's per-row invariant, over the full parser corpus."""
+    """Both regex extraction paths must extract byte-identical values per
+    line — the north rule's per-row invariant, over the full parser
+    corpus. 'jvm' is the default codegen path; 'pandas' is the pandas
+    UDF path, which RegexParser.apply takes for skip_empty_values=False
+    (no corpus line has an empty capture, so the values agree)."""
     import dataclasses
 
-    p = dataclasses.replace(PARSERS[name], engine=engine)
+    p = dataclasses.replace(PARSERS[name], skip_empty_values=engine == "jvm")
     df = spark.createDataFrame([(line,)], "line string")
     row = p.apply(df, "line", ts_col="__ts").collect()[0]
     for k, v in want.items():

@@ -70,22 +70,52 @@ def test_apache_jvm(spark):
 
 
 def test_apache_pandas(spark):
+    """skip_empty_values=False is the one setting that runs the pandas
+    extraction path; on a line without empty captures it extracts the
+    same keys as the JVM path."""
     import dataclasses
 
-    p = dataclasses.replace(APACHE, engine="pandas")
+    p = dataclasses.replace(APACHE, skip_empty_values=False)
     row = _parse(spark, p, [APACHE_LINE]).first()
     _check_apache(row)
 
 
 def test_apache_missing_groups_both_engines(spark):
+    """Non-participating optional groups are NULL on both paths; an
+    empty capture is NULL on the default (JVM, skip_empty) path and ''
+    with skip_empty_values=False (pandas path)."""
     import dataclasses
 
-    for eng in ("jvm", "pandas"):
-        p = dataclasses.replace(APACHE, engine=eng)
-        row = _parse(spark, p, [APACHE_NOREF]).first()
-        assert row["referer"] is None and row["agent"] is None, eng
-        assert row["code"] == "500" and row["size"] == "123", eng
-        assert row["__parsed_ts"] == dt.datetime(2024, 3, 1), eng
+    empty_ref = APACHE_NOREF + ' "" "curl/8.0"'
+    for skip in (True, False):
+        p = dataclasses.replace(APACHE, skip_empty_values=skip)
+        rows = _parse(spark, p, [APACHE_NOREF, empty_ref]).collect()
+        noref, empty = sorted(rows, key=lambda r: r["agent"] is not None)
+        assert noref["referer"] is None and noref["agent"] is None, skip
+        assert noref["code"] == "500" and noref["size"] == "123", skip
+        assert noref["__parsed_ts"] == dt.datetime(2024, 3, 1), skip
+        assert empty["referer"] == (None if skip else ""), skip
+        assert empty["agent"] == "curl/8.0", skip
+
+
+def test_config_skip_empty_values_off(spark):
+    """A [PARSER] loaded from config with Skip_Empty_Values Off keeps the
+    reference's distinction: a non-participating optional group is no
+    key (NULL), an empty capture is the value ''."""
+    from fluent_bit_spark.config import Section, parser_from_section
+
+    p = parser_from_section(Section("PARSER", [
+        ("name", "opt"),
+        ("format", "regex"),
+        ("regex", r"^a=(?<a>\d+)(?: b=(?<b>\d*))?$"),
+        ("skip_empty_values", "Off"),
+    ]))
+    assert p.skip_empty_values is False
+    got = sorted(
+        (r["line"], r["a"], r["b"])
+        for r in _parse(spark, p, ["a=1", "a=1 b=", "a=1 b=2"]).collect()
+    )
+    assert got == [("a=1", "1", None), ("a=1 b=", "1", ""), ("a=1 b=2", "1", "2")]
 
 
 def test_apache_non_matching_line(spark):

@@ -130,3 +130,34 @@ def test_metrics_leg(pages, tmp_path):
     total = m.agg(F.sum("n")).first()[0]
     assert total == N
     assert m.select("window_start").distinct().count() == 50
+
+
+def test_removed_engines_fail_loudly(spark, tmp_path):
+    """Only 'jvm' and 'fused' exist: a stale caller naming a removed
+    engine gets a ValueError (or an argparse error) instead of silently
+    running the JVM path."""
+    import subprocess
+    import sys
+
+    from fluent_bit_spark import webtext
+    from fluent_bit_spark.streaming import run_pipeline_stream
+
+    df = generate(spark, 5, partitions=1)
+    for eng in ("pandas", "arrow"):
+        with pytest.raises(ValueError, match=eng):
+            webtext.extract_stage(df, engine=eng)
+    with pytest.raises(ValueError, match="pandas"):
+        parse_stage(df, engine="pandas")
+    with pytest.raises(ValueError, match="pandas"):
+        run_pipeline(spark, df, str(tmp_path / "out"), engine="pandas")
+    with pytest.raises(ValueError, match="pandas"):
+        run_pipeline_stream(spark, df, str(tmp_path / "s"), DEFAULT_SINKS, engine="pandas")
+    assert not (tmp_path / "out").exists()
+
+    job = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "run_pipeline.py")
+    proc = subprocess.run(
+        [sys.executable, job, "--output", str(tmp_path / "job"), "--engine", "pandas"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2
+    assert "invalid choice: 'pandas'" in proc.stderr

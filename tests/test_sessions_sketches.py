@@ -229,6 +229,94 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     assert s == b
 
 
+def _closed_stream_sessions(spark, df, tmp_path, gap_sec):
+    """Run sessionize_stream over ``df`` written as ONE parquet file
+    (single writer: arrival order is the frame's order), so all of it is
+    one micro-batch. No-data batches are off (a processing-time timeout
+    would otherwise request one per trigger and availableNow would never
+    finish) and the idle timeout is far away, so exactly the sessions
+    closed by a later event are emitted."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    df.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        q = (
+            sessions.sessionize_stream(
+                stream, key="user_id", ts_col="ts", gap_sec=gap_sec,
+                idle_timeout_ms=3_600_000,
+            )
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", str(tmp_path / "chk"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(300), "stream did not finish"
+        finally:
+            q.stop()
+    finally:
+        spark.conf.unset(conf)
+    return sorted(
+        (r["user_id"], r["n_events"], r["duration_sec"])
+        for r in spark.read.parquet(out).collect()
+    )
+
+
+def _closed_batch_sessions(df, gap_sec):
+    """Batch sessionize minus each key's last (still open) session."""
+    rows = sessions.sessionize(df, key="user_id", ts_col="ts", gap_sec=gap_sec).collect()
+    last = {}
+    for r in rows:
+        last[r["key"]] = max(last.get(r["key"], 0), r["session"])
+    return sorted(
+        (r["key"], r["n_events"], r["duration_sec"])
+        for r in rows if r["session"] != last[r["key"]]
+    )
+
+
+def test_sessionize_stream_sorts_across_arrow_chunks(spark, tmp_path):
+    """25k events of ONE key in one micro-batch arrive as several
+    ~10k-row Arrow chunks, here in descending time order. The fold must
+    sort across all chunks: a per-chunk sort folds later chunks' older
+    events into the open session and closes the wrong sessions."""
+    n, per_session = 25_000, 500
+    base = 1_704_067_200  # 2024-01-01 00:00:00 UTC
+    i = F.lit(n - 1) - F.col("id")  # descending ts in file order
+    sec = base + (i / per_session).cast("long") * 2_000 + i % per_session
+    df = spark.range(0, n, 1, 1).select(
+        F.lit(1).cast("long").alias("user_id"),
+        F.timestamp_seconds(sec).alias("ts"),
+    )
+    want = _closed_batch_sessions(df, gap_sec=600)
+    assert len(want) == n // per_session - 1
+    assert _closed_stream_sessions(spark, df, tmp_path, gap_sec=600) == want
+
+
+def test_sessionize_stream_null_ts_does_not_kill_query(spark, tmp_path):
+    """A null timestamp is dropped instead of failing the int64 cast,
+    and a key whose only event has a null ts emits nothing and keeps no
+    state."""
+    rows = [
+        (1, "2024-01-01 00:00:00"),
+        (1, "2024-01-01 00:01:40"),
+        (1, None),
+        (1, "2024-01-01 00:40:00"),
+        (1, "2024-01-01 00:41:40"),
+        (2, None),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts string").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    got = _closed_stream_sessions(spark, df, tmp_path, gap_sec=600)
+    assert got == _closed_batch_sessions(df.filter(F.col("ts").isNotNull()), 600)
+    assert got == [(1, 2, 100.0)]
+
+
 def test_entry_rows_contract(spark):
     """The reshaped driver rows keep mode-disjoint schemas aligned."""
     import __spark_entry__ as entry

@@ -1,10 +1,13 @@
-"""HTML -> text extraction: spec goldens, engine byte-identity, and the
-webgen roundtrip that proves byte-identical extracted text per url."""
+"""HTML -> text extraction: spec goldens, JVM-vs-fused byte-identity,
+and the webgen roundtrip that proves byte-identical extracted text per
+url."""
 
 from pyspark.sql import functions as F
 
 from fluent_bit_spark import webtext
+from fluent_bit_spark.parsers import APACHE
 from fluent_bit_spark.webgen import generate
+from fluent_bit_spark.webtext import extract_parse_arrow
 
 
 def _extract_one(spark, html: str) -> dict:
@@ -73,51 +76,53 @@ TRICKY = [
 ]
 
 
+def _jvm_and_fused(df, key="i"):
+    """{key: (text, title, n_links)} from the JVM codegen expressions and
+    from the fused Arrow/RE2 operator, over the same rows."""
+    html = F.col("html")
+    jvm = df.select(
+        key,
+        webtext.html_to_text(html).alias("text_extracted"),
+        webtext.extract_title(html).alias("title"),
+        F.size(webtext.extract_links(html)).alias("n_links"),
+    )
+    fused = extract_parse_arrow(df, APACHE)
+
+    def rows(frame):
+        return {
+            r[key]: (r["text_extracted"], r["title"], r["n_links"])
+            for r in frame.select(key, "text_extracted", "title", "n_links").collect()
+        }
+
+    return rows(jvm), rows(fused)
+
+
 def test_engines_byte_identical(spark):
-    """jvm codegen chain vs pandas UDF vs arrow/RE2 mapInArrow: identical
-    bytes on every tricky fragment AND on 300 generated
-    Common-Crawl-shape pages."""
-    rows = [(i, t.encode("utf-8")) for i, t in enumerate(TRICKY)]
-    df = spark.createDataFrame(rows, "i long, html binary")
-    jvm = df.select("i", webtext.html_to_text(F.col("html")).alias("t"))
-    pnd = webtext.html_to_text_pandas(df, out_col="t", title_col=None, links_col=None)
-    arw = webtext.html_to_text_arrow(df, out_col="t", title_col=None, links_col=None)
-    j = {r["i"]: r["t"] for r in jvm.collect()}
-    p = {r["i"]: r["t"] for r in pnd.select("i", "t").collect()}
-    a = {r["i"]: r["t"] for r in arw.select("i", "t").collect()}
-    assert j == p == a
+    """jvm codegen chain vs the fused arrow/RE2 mapInArrow: identical
+    text, title and link count on every tricky fragment, the golden
+    page, AND 300 generated Common-Crawl-shape pages."""
+    rows = [(i, t.encode("utf-8")) for i, t in enumerate(TRICKY + [GOLDEN])]
+    jvm, fused = _jvm_and_fused(spark.createDataFrame(rows, "i long, html binary"))
+    assert jvm == fused
 
     pages = generate(spark, 300, partitions=4)
-    jvm2 = webtext.extract_stage(pages, engine="jvm").select(
-        "url", "text_extracted", "title", "n_links"
-    )
-    for eng in ("pandas", "arrow"):
-        other = webtext.extract_stage(pages, engine=eng).select(
-            "url", "text_extracted", "title", "n_links"
-        )
-        diff = (
-            jvm2.alias("a")
-            .join(other.alias("b"), "url")
-            .filter(
-                (F.col("a.text_extracted") != F.col("b.text_extracted"))
-                | (F.col("a.title") != F.col("b.title"))
-                | (F.col("a.n_links") != F.col("b.n_links"))
-            )
-            .count()
-        )
-        assert diff == 0, eng
-    assert jvm2.count() == 300
+    jvm, fused = _jvm_and_fused(pages, key="url")
+    assert len(jvm) == 300
+    assert jvm == fused
 
 
 def test_extract_stage_keep_html_prunes(spark):
-    """keep_html=False drops the wide binary column at the seam on every
-    engine; the remaining columns and values are unchanged."""
+    """keep_html=False drops the wide binary column at the seam on both
+    paths (keep_html=True keeps it); the extracted columns are there."""
     pages = generate(spark, 50, partitions=2)
-    for eng in ("jvm", "pandas", "arrow"):
-        out = webtext.extract_stage(pages, engine=eng, keep_html=False)
-        assert "html" not in out.columns, eng
-        assert {"text_extracted", "title", "n_links"} <= set(out.columns), eng
-        assert out.count() == 50, eng
+    for keep in (False, True):
+        for path, out in (
+            ("jvm", webtext.extract_stage(pages, engine="jvm", keep_html=keep)),
+            ("fused", extract_parse_arrow(pages, APACHE, keep_html=keep)),
+        ):
+            assert ("html" in out.columns) == keep, (path, keep)
+            assert {"text_extracted", "title", "n_links"} <= set(out.columns), path
+            assert out.count() == 50, path
 
 
 def test_webgen_roundtrip_byte_identical_per_url(spark):
@@ -163,9 +168,6 @@ def test_extract_parse_arrow_requires_skip_empty(spark):
 
     import pytest
 
-    from fluent_bit_spark.parsers import APACHE
-    from fluent_bit_spark.webtext import extract_parse_arrow
-
     pages = generate(spark, 5, partitions=1)
     bad = dataclasses.replace(APACHE, skip_empty_values=False)
     with pytest.raises(ValueError, match="skip_empty_values"):
@@ -174,15 +176,15 @@ def test_extract_parse_arrow_requires_skip_empty(spark):
 
 def test_fused_extract_parse_equals_unfused(spark):
     """extract_parse_arrow (one mapInArrow crossing) is value-identical
-    to extract_stage(engine='arrow') + RegexParser pandas parse on every
+    to the JVM reference path, extract_stage + parse_stage, on every
     shared column, including the JVM-side parsed timestamp."""
     from fluent_bit_spark.pipeline import extract_parse_stage, parse_stage
 
     pages = generate(spark, 500, partitions=4).drop("text")
     fused = extract_parse_stage(pages)
     unfused = parse_stage(
-        webtext.extract_stage(pages, engine="arrow", keep_html=False),
-        engine="pandas",
+        webtext.extract_stage(pages, engine="jvm", keep_html=False),
+        engine="jvm",
         text_col="text_extracted",
     )
     common = [c for c in fused.columns if c in unfused.columns]
@@ -194,24 +196,21 @@ def test_fused_extract_parse_equals_unfused(spark):
 
 def test_null_html_is_empty_document_on_every_engine(spark):
     """Spec step 0: NULL html = empty document (text '', title '',
-    n_links 0) — identical on jvm, pandas, and arrow engines (previously
-    jvm propagated null, pandas yielded ''/0, arrow yielded null/null)."""
+    n_links 0) — identical on the jvm and fused paths (instead of null
+    propagation)."""
     df = spark.createDataFrame(
         [(1, None), (2, b"<p>x</p>")], "i long, html binary"
     )
     expect = {1: ("", "", 0), 2: ("x", "", 0)}
-    for eng in ("jvm", "pandas", "arrow"):
-        out = webtext.extract_stage(df, engine=eng)
-        got = {
-            r["i"]: (r["text_extracted"], r["title"], r["n_links"])
-            for r in out.collect()
-        }
-        assert got == expect, (eng, got)
+    out = webtext.extract_stage(df, engine="jvm")
+    got = {
+        r["i"]: (r["text_extracted"], r["title"], r["n_links"])
+        for r in out.collect()
+    }
+    assert got == expect, got
+    assert _jvm_and_fused(df) == (expect, expect)
 
-    # and the fused engine: null html parses to no LOG line, all groups null
-    from fluent_bit_spark.parsers import APACHE
-    from fluent_bit_spark.webtext import extract_parse_arrow
-
+    # and the fused parse: null html parses to no LOG line, all groups null
     fused = extract_parse_arrow(df, APACHE).select("i", "text_extracted", "host")
     got = {r["i"]: (r["text_extracted"], r["host"]) for r in fused.collect()}
     assert got == {1: ("", None), 2: ("x", None)}
@@ -219,29 +218,22 @@ def test_null_html_is_empty_document_on_every_engine(spark):
 
 def test_missing_html_col_fails_fast(spark):
     """pyarrow get_field_index returns -1 for unknown names and
-    column(-1) silently reads the LAST column — the engines must refuse
-    a missing input column instead of extracting garbage."""
+    column(-1) silently reads the LAST column — the fused path must
+    refuse a missing input column instead of extracting garbage (the JVM
+    path fails Spark's own analysis)."""
     import pytest
-
-    from fluent_bit_spark.parsers import APACHE
-    from fluent_bit_spark.webtext import extract_parse_arrow
+    from pyspark.errors import AnalysisException
 
     df = spark.createDataFrame([("a", "b")], "text string, lang string")
-    for fn in (
-        lambda: webtext.html_to_text_pandas(df),
-        lambda: webtext.html_to_text_arrow(df),
-        lambda: extract_parse_arrow(df, APACHE),
-    ):
-        with pytest.raises(ValueError, match="html"):
-            fn()
+    with pytest.raises(ValueError, match="html"):
+        extract_parse_arrow(df, APACHE)
+    with pytest.raises(AnalysisException, match="html"):
+        webtext.extract_stage(df, engine="jvm")
 
 
 def test_line_pat_first_paren_rewrite(spark):
     """The line_pat capture-group naming skips escaped and non-capturing
     parens instead of blindly rewriting the first '('."""
-    from fluent_bit_spark.parsers import APACHE
-    from fluent_bit_spark.webtext import extract_parse_arrow
-
     html = "<p>head</p>\nLOG 1.2.3.4 - - [t] \"GET /x\" 200 7".encode()
     df = spark.createDataFrame([(1, html)], "i long, html binary")
     # non-capturing group BEFORE the real capture group
@@ -269,42 +261,28 @@ MALFORMED = [
 
 def test_malformed_utf8_is_lossy_not_fatal(spark):
     """Spec step 1: invalid UTF-8 decodes LOSSILY (maximal-subpart
-    U+FFFD) on every engine instead of failing the task — one bad
-    Common-Crawl page must not kill a 10^12-row job. All engines agree
+    U+FFFD) on both paths instead of failing the task — one bad
+    Common-Crawl page must not kill a 10^12-row job. Both agree
     byte-for-byte with python's errors='replace'."""
     rows = [(i, b) for i, b in enumerate(MALFORMED)]
     df = spark.createDataFrame(rows, "i long, html binary")
 
-    jvm = {r["i"]: r["t"] for r in df.select(
-        "i", webtext.html_to_text(F.col("html")).alias("t")).collect()}
-    pnd = {r["i"]: r["t"] for r in webtext.html_to_text_pandas(
-        df, out_col="t", title_col=None, links_col=None).select("i", "t").collect()}
-    arw = {r["i"]: r["t"] for r in webtext.html_to_text_arrow(
-        df, out_col="t", title_col=None, links_col=None).select("i", "t").collect()}
-    assert jvm == pnd == arw
+    jvm, fused = _jvm_and_fused(df)
+    assert jvm == fused
     # the replacement char itself survives extraction as text
-    assert "�" in jvm[1] and "bad" in jvm[1]
+    assert "�" in jvm[1][0] and "bad" in jvm[1][0]
     # malformed title decodes lossily and doesn't poison the body
-    assert jvm[7] == "t�itle\nbody"
+    assert jvm[7] == ("t�itle\nbody", "t�itle", 0)
 
-    # fused engine: same rows, parse columns null, no task failure
-    from fluent_bit_spark.parsers import APACHE
-    from fluent_bit_spark.webtext import extract_parse_arrow
-
-    fused = extract_parse_arrow(df, APACHE)
-    got = {r["i"]: r["text_extracted"] for r in
-           fused.select("i", "text_extracted").collect()}
-    assert got == jvm
-
-    # title path through the arrow engine on the malformed-title row
-    t = webtext.html_to_text_arrow(df).filter(F.col("i") == 7).collect()[0]
-    assert t["title"] == "t�itle"
+    # fused parse: parse columns null, no task failure
+    assert extract_parse_arrow(df, APACHE).filter(F.col("host").isNotNull()).count() == 0
 
 
 def test_engine_identity_property(spark):
     """Property test: on randomized HTML-ish fragments (nested tags,
     stray angle brackets, entities, unicode, partial script/style/
-    comment blocks), the three engines return identical bytes."""
+    comment blocks), the jvm and fused paths return identical text,
+    title and link count."""
     import random
 
     rng = random.Random(42)
@@ -320,15 +298,10 @@ def test_engine_identity_property(spark):
         for _ in range(120)
     ]
     rows = [(i, t.encode("utf-8")) for i, t in enumerate(frags)]
-    df = spark.createDataFrame(rows, "i long, html binary")
-    jvm = {r["i"]: r["t"] for r in df.select(
-        "i", webtext.html_to_text(F.col("html")).alias("t")).collect()}
-    pnd = {r["i"]: r["t"] for r in webtext.html_to_text_pandas(
-        df, out_col="t", title_col=None, links_col=None).select("i", "t").collect()}
-    arw = {r["i"]: r["t"] for r in webtext.html_to_text_arrow(
-        df, out_col="t", title_col=None, links_col=None).select("i", "t").collect()}
-    bad = [i for i in jvm if not (jvm[i] == pnd[i] == arw[i])]
-    assert not bad, [(i, frags[i], jvm[i], pnd[i], arw[i]) for i in bad[:3]]
+    jvm, fused = _jvm_and_fused(spark.createDataFrame(rows, "i long, html binary"))
+    assert len(jvm) == len(fused) == 120
+    bad = [i for i in jvm if jvm[i] != fused[i]]
+    assert not bad, [(i, frags[i], jvm[i], fused[i]) for i in bad[:3]]
 
 
 def test_normalize_url_vectors(spark):
