@@ -14,11 +14,26 @@ Two record models share one executor:
 
 Window semantics: the reference fires *processing-time* timers
 (flb_sp.c:519-547) and is single-node; we assign **event-time** windows
-with F.window over the record timestamp — deterministic, testable, and
-the only sane definition on a cluster. Hopping windows recompute per
-window, which fixes the reference's known MIN/MAX retraction bug
-(flb_sp_aggregate_func.c:348-355: min/max are not retractable, stale
-extremes persist across hops).
+over the record timestamp — deterministic, testable, and the only sane
+definition on a cluster. Windows are epoch-aligned [start, start + size)
+with start a multiple of the advance, exactly as F.window assigns them.
+Hopping windows recompute MIN/MAX per window, which fixes the
+reference's known MIN/MAX retraction bug (flb_sp_aggregate_func.c:
+348-355: min/max are not retractable, stale extremes persist across
+hops).
+
+Batch and streaming build windows differently:
+* batch (COUNT/SUM/MIN/MAX/AVG only) aggregates each event once into an
+  integer pane of gcd(size, advance) epoch seconds — a tumbling window
+  is that one aggregate; a hopping window rolls the pane partials up per
+  window start (sum of counts and sums, min of mins, max of maxes), the
+  reference's per-hop slot scheme (flb_sp_window.c:56-103) without the
+  retraction. F.window would instead build a struct of CASE arithmetic
+  per event and, for hopping windows, Expand every event into
+  size/advance hash-table inserts.
+* streaming frames and TIMESERIES_FORECAST keep F.window: append-mode
+  state eviction needs the window struct the watermark is tracked on,
+  and the regression's moments do not roll up from pane partials here.
 
 Aggregation notes (src/stream_processor/flb_sp_aggregate_func.c):
 * COUNT(key) == COUNT(*) == group record count (:199-205).
@@ -31,11 +46,15 @@ Aggregation notes (src/stream_processor/flb_sp_aggregate_func.c):
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
+from functools import reduce
+from operator import and_
 from typing import Optional, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import fbrecord
 from ..router import glob_to_regex
@@ -178,20 +197,20 @@ class StaticBinding:
     """Operands are typed columns of a fixed-schema DataFrame."""
 
     def __init__(self, df: DataFrame, tag_col: str = "tag", ts_col: str = "ts"):
-        self.df = df
+        # read once: DataFrame.schema is a JVM round trip and a JSON
+        # re-parse on every access
+        self.schema = df.schema
         self.tag_col = tag_col
         self.ts_col = ts_col
 
     def value(self, key: KeyRef) -> FBVal:
         c = F.col(key.name)
-        dtype = self.df.schema[key.name].dataType
+        dtype = self.schema[key.name].dataType
         for s in key.subkeys:
             if isinstance(s, int):
                 c = F.element_at(c, s + 1)
                 dtype = dtype.elementType
             else:
-                from pyspark.sql import types as T
-
                 if isinstance(dtype, T.StructType):
                     c = c.getField(s)
                     dtype = dtype[s].dataType
@@ -461,11 +480,9 @@ def execute(
 
     if q.where is not None:
         df = df.filter(_cond(b, q.where, now_ts))
-        if mode == "static":
-            b = StaticBinding(df, tag_col, ts_col)
 
     if q.has_aggregates:
-        out = _execute_aggregate(q, df, b, mode, ts_col, now_ts)
+        out = _execute_aggregate(q, df, b, mode, ts_col)
     else:
         out = _execute_projection(q, df, b, mode, body_col, now_ts)
 
@@ -515,7 +532,113 @@ def _execute_projection(q, df, b, mode, body_col, now_ts) -> DataFrame:
     return df.select(*keep, new_body.alias(body_col))
 
 
-def _execute_aggregate(q, df, b, mode, ts_col, now_ts) -> DataFrame:
+# aggregates whose window value rolls up from per-pane partials
+_PANE_FUNCS = {"COUNT", "SUM", "MIN", "MAX", "AVG"}
+
+
+def _ident(name: str) -> str:
+    """A column name quoted for SQL text (keys may hold '-' or '.')."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _seconds_codec(dtype):
+    """(to epoch seconds, from epoch seconds) SQL templates for a
+    timestamp type, on the clock F.window buckets: the UTC instant of a
+    TIMESTAMP, the wall clock of a TIMESTAMP_NTZ. To-seconds floors, so
+    pre-epoch times bucket down as in F.window. NTZ goes through
+    NTZ - NTZ intervals only: Spark 4.1's timestampdiff, timestampadd and
+    date_trunc read an NTZ value in the session time zone, which shifts
+    wall-clock times in a DST gap. Measured from year 1 (62135596800 s
+    before the epoch) the interval is never negative, so its truncating
+    bigint cast floors. None for any other type."""
+    if isinstance(dtype, T.TimestampType):
+        return "unix_seconds({})", "timestamp_seconds({})"
+    if isinstance(dtype, T.TimestampNTZType):
+        return (
+            "(CAST(CAST({} - TIMESTAMP_NTZ'0001-01-01 00:00:00' AS INTERVAL SECOND)"
+            " AS BIGINT) - 62135596800)",
+            "TIMESTAMP_NTZ'1970-01-01 00:00:00' + INTERVAL '1' SECOND * ({})",
+        )
+    return None
+
+
+def _agg(k: SelectKey, n: Optional[Column], ts_col: Optional[str] = None) -> Column:
+    """One aggregate over a group's records, named as selected."""
+    if k.func == "COUNT":
+        # COUNT(key) == COUNT(*) (flb_sp_aggregate_func.c:199-205)
+        return F.count(F.lit(1)).alias(k.out_name)
+    if k.func == "MIN":
+        return F.min(n).alias(k.out_name)
+    if k.func == "MAX":
+        return F.max(n).alias(k.out_name)
+    if k.func == "SUM":
+        return F.sum(n).alias(k.out_name)
+    if k.func == "AVG":
+        # AVG = SUM/record-count as float (flb_sp_aggregate_func.c:170-205)
+        return (F.sum(n) / F.count(F.lit(1))).alias(k.out_name)
+    # TIMESERIES_FORECAST: simple linear regression of y over record
+    # time, predicted at latest_time + offset (flb_sp_aggregate_func.c:
+    # 223-308). Use covar_pop/var_pop (Welford-stable) instead of the
+    # raw-moment form: x is epoch seconds (~1.7e9) and avg(x*x)-avg(x)^2
+    # cancels catastrophically in doubles. Centered prediction
+    # avg(y) + b1*((max(x)-avg(x)) + t) avoids the same in b0.
+    # NTZ-safe epoch double (parquet timestamps read as TIMESTAMP_NTZ
+    # cannot cast straight to double); session tz is UTC in tests
+    x = F.col(ts_col).cast("timestamp").cast("double")
+    b1 = F.try_divide(F.covar_pop(x, n), F.var_pop(x))
+    forecast = F.avg(n) + b1 * ((F.max(x) - F.avg(x)) + F.lit(float(k.forecast_offset)))
+    return forecast.alias(k.out_name)
+
+
+def _pane_aggregate(df, win, secs, groups, measures, flags):
+    """Windowed aggregate over integer panes of gcd(size, advance) seconds.
+
+    Each record enters the hash table once, under its pane. A window
+    [s, s + size) is the union of its panes because s and size are pane
+    multiples, so a hopping window rolls the pane partials up: each pane
+    row is exploded to the window starts that contain it (multiples of
+    the advance in (p - size, p]) and re-aggregated — SUM of counts and
+    sums, MIN of mins, MAX of maxes, AVG as rolled-up sum over count.
+    Window sizes are whole seconds (SECOND/MINUTE/HOUR units), so panes
+    over floored epoch seconds bucket exactly as F.window's microseconds.
+    `secs` is the SQL for a record's epoch seconds. The roll-up is built
+    from SQL strings, one Py4J call per column: each Column function call
+    costs several round trips, and this plan is rebuilt on every run.
+    Returns the frame, with the window start in `__ws`."""
+    size = win.size_sec
+    adv = win.advance_sec if win.kind == "hopping" else size
+    keys = [c.alias(name) for name, c in groups.items()]
+    flag_aggs = [c.alias(name) for name, c in flags.items()]
+    if adv == size:  # tumbling: the pane is the window
+        ws = F.expr(f"{secs} - pmod({secs}, {size}L) AS __ws")
+        return df.groupBy(ws, *keys).agg(*[_agg(k, n) for k, n in measures], *flag_aggs)
+    partial, rollup = [F.expr("count(1) AS __c")], []
+    for i, (k, n) in enumerate(measures):
+        m = f"__m{i}"
+        if k.func == "COUNT":
+            total = "sum(__c)"
+        elif k.func == "AVG":
+            partial.append(F.sum(n).alias(m))
+            total = f"sum({m}) / sum(__c)"
+        else:
+            partial.append(getattr(F, k.func.lower())(n).alias(m))
+            total = f"{k.func.lower()}({m})"
+        rollup.append(F.expr(f"{total} AS {_ident(k.out_name)}"))
+    rollup += [F.expr(f"min({_ident(name)}) AS {_ident(name)}") for name in flags]
+    last = f"__p - pmod(__p, {adv}L)"
+    first = f"{last} - {(-(-size // adv) - 1) * adv}L"
+    starts = f"filter(sequence({first}, {last}, {adv}L), s -> s > __p - {size}L)"
+    pane = math.gcd(size, adv)
+    return (
+        df.groupBy(F.expr(f"{secs} - pmod({secs}, {pane}L) AS __p"), *keys)
+        .agg(*partial, *flag_aggs)
+        .select(F.expr(f"explode({starts}) AS __ws"), "*")
+        .groupBy("__ws", *groups)
+        .agg(*rollup)
+    )
+
+
+def _execute_aggregate(q, df, b, mode, ts_col) -> DataFrame:
     # selecting a bare key that is not grouped is an error (flb_sp.c:500-506)
     group_names = {g.name for g in q.groupby}
     for k in q.keys:
@@ -525,77 +648,63 @@ def _execute_aggregate(q, df, b, mode, ts_col, now_ts) -> DataFrame:
             )
 
     # drop records missing any group key (flb_sp.c:1368-1372)
-    for g in q.groupby:
-        df = df.filter(b.present(g))
+    keep = [b.present(g) for g in q.groupby]
 
-    group_cols = []
-    emit_group_cols = []
-    int_flag_aggs = []
+    groups, flags = {}, {}
     for g in q.groupby:
         v = b.value(g)
-        ge = b.group_expr(v)
-        group_cols.append(ge.alias(f"__g_{g.name}"))
-        emit_group_cols.append(g)
+        groups[f"__g_{g.name}"] = b.group_expr(v)
         if mode == "dynamic":
             # emit typing: the stored key stays int64 unless any float
             # member promoted it (flb_sp_groupby.c:36-44); tracked as an
             # all-members-int flag outside the grouping identity
-            int_flag_aggs.append(
-                F.min(b.group_is_int(v)).alias(f"__gi_{g.name}")
-            )
+            flags[f"__gi_{g.name}"] = F.min(b.group_is_int(v))
 
-    if q.window is not None:
-        size = f"{q.window.size_sec} seconds"
-        if q.window.kind == "hopping":
-            w = F.window(F.col(ts_col), size, f"{q.window.advance_sec} seconds")
-        else:
-            w = F.window(F.col(ts_col), size)
-        group_cols = [w.alias("__w")] + group_cols
+    measures = [
+        (k, None if k.func == "COUNT" else b.numeric(b.value(k.key)))
+        for k in q.keys
+        if k.func in AGG_FUNCS
+    ]
 
-    aggs = []
-    for k in q.keys:
-        if k.func is None or k.func not in AGG_FUNCS:
-            continue
-        name = k.out_name
-        if k.func == "COUNT":
-            aggs.append(F.count(F.lit(1)).alias(name))
-            continue
-        v = b.value(k.key)
-        n = b.numeric(v)
-        if k.func == "MIN":
-            aggs.append(F.min(n).alias(name))
-        elif k.func == "MAX":
-            aggs.append(F.max(n).alias(name))
-        elif k.func == "SUM":
-            aggs.append(F.sum(n).alias(name))
-        elif k.func == "AVG":
-            # AVG = SUM/record-count as float (flb_sp_aggregate_func.c:170-205)
-            aggs.append((F.sum(n) / F.count(F.lit(1))).alias(name))
-        elif k.func == "TIMESERIES_FORECAST":
-            # simple linear regression of y over record time, predicted at
-            # latest_time + offset (flb_sp_aggregate_func.c:223-308). Use
-            # covar_pop/var_pop (Welford-stable) instead of the raw-moment
-            # form: x is epoch seconds (~1.7e9) and avg(x*x)-avg(x)^2
-            # cancels catastrophically in doubles. Centered prediction
-            # avg(y) + b1*((max(x)-avg(x)) + t) avoids the same in b0.
-            # NTZ-safe epoch double (parquet timestamps read as TIMESTAMP_NTZ
-            # cannot cast straight to double); session tz is UTC in tests
-            x = F.col(ts_col).cast("timestamp").cast("double")
-            y = n
-            b1 = F.try_divide(F.covar_pop(x, y), F.var_pop(x))
-            forecast = F.avg(y) + b1 * (
-                (F.max(x) - F.avg(x)) + F.lit(float(k.forecast_offset))
-            )
-            aggs.append(forecast.alias(name))
+    codec = None
+    if q.window is not None and all(k.func in _PANE_FUNCS for k, _ in measures) \
+            and not df.isStreaming:
+        schema = b.schema if mode == "static" else df.schema
+        codec = _seconds_codec(next((f.dataType for f in schema if f.name == ts_col), None))
+    if codec is not None:
+        keep.append(F.col(ts_col).isNotNull())  # F.window drops null times
+    if keep:
+        df = df.filter(reduce(and_, keep))
 
-    grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    out = grouped.agg(*aggs, *int_flag_aggs)
+    window_cols = []
+    if codec is not None:
+        to_s, from_s = codec
+        secs = to_s.format(_ident(ts_col))
+        out = _pane_aggregate(df, q.window, secs, groups, measures, flags)
+        window_cols = [
+            F.expr(f"{from_s.format('__ws')} AS window_start"),
+            F.expr(f"{from_s.format(f'__ws + {q.window.size_sec}L')} AS window_end"),
+        ]
+    else:
+        keys = [c.alias(name) for name, c in groups.items()]
+        if q.window is not None:
+            size = f"{q.window.size_sec} seconds"
+            if q.window.kind == "hopping":
+                w = F.window(F.col(ts_col), size, f"{q.window.advance_sec} seconds")
+            else:
+                w = F.window(F.col(ts_col), size)
+            keys.insert(0, w.alias("__w"))
+            window_cols = [
+                F.col("__w.start").alias("window_start"),
+                F.col("__w.end").alias("window_end"),
+            ]
+        out = df.groupBy(*keys).agg(
+            *[_agg(k, n, ts_col) for k, n in measures],
+            *[c.alias(name) for name, c in flags.items()],
+        )
 
     # re-emit group keys under their selected names/aliases
-    sel = []
-    if q.window is not None:
-        sel.append(F.col("__w.start").alias("window_start"))
-        sel.append(F.col("__w.end").alias("window_end"))
+    sel = window_cols
     for k in q.keys:
         if k.func in AGG_FUNCS:
             sel.append(F.col(f"`{k.out_name}`"))
@@ -637,11 +746,14 @@ def execute_stream(
 
     The reference's stream processor is stream-native: windows fire on
     processing-time timers (flb_sp.c:519-527) and hold only the open
-    window's accumulators. The Spark mapping is the same plan the batch
-    executor builds — the window assignment / groupBy / aggregates are
-    identical expressions — wrapped with an EVENT-TIME watermark so the
-    state store evicts closed windows (bounded state, late data handled;
-    the documented upgrade over the reference, SURVEY §2.5). Works with
+    window's accumulators. The Spark mapping is the batch executor's
+    WHERE / GROUP BY / aggregate expressions wrapped with an EVENT-TIME
+    watermark so the state store evicts closed windows (bounded state,
+    late data handled; the documented upgrade over the reference, SURVEY
+    §2.5). Windows here are F.window structs, not the batch executor's
+    integer panes: append mode evicts state by the watermark on the
+    grouping's event-time window column, which only F.window carries;
+    both assign the same [start, start + size) windows. Works with
     writeStream outputMode('append') for windowed queries ('update' for
     un-windowed aggregates).
 

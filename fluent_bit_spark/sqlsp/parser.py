@@ -371,7 +371,12 @@ def _parse_window(p: _P) -> WindowSpec:
         _, m = p.next()
         unit2 = p.next()[1].upper()
         p.expect(")")
-        return WindowSpec("hopping", size, int(m) * _UNIT_SECONDS[unit2])
+        advance = int(m) * _UNIT_SECONDS[unit2]
+        if not 0 < advance <= size:
+            # F.window's rule (slide <= duration): a larger advance would
+            # leave gaps between windows whose records no window counts
+            raise ValueError("HOPPING needs 0 < ADVANCE BY <= window size")
+        return WindowSpec("hopping", size, advance)
     raise ValueError("bad window spec")
 
 
