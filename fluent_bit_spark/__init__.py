@@ -15,6 +15,8 @@ semantics   Fluent Bit comparison/truthiness/coercion semantics as Column
             helpers (reference: src/stream_processor/flb_sp.c:790-1046).
 accessor    record-accessor path compiler ($key['sub'], $TAG[n], $0..$9)
             (reference: src/record_accessor/ra.l, flb_record_accessor.c).
+sqltext     SQL-text literals and identifiers: the per-pass plan builders
+            emit one F.expr per column instead of Column call chains.
 timefmt     strptime -> Spark datetime pattern translation incl. %L
             fractions and year-less formats (src/flb_parser.c:248-335).
 parsers     regex/json/logfmt/ltsv parsers as vectorized transforms

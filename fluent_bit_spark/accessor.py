@@ -20,6 +20,8 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import sql_col, sql_ident, sql_str
+
 # identifier charset per the reference lexer (ra.l:56):
 # [_A-Za-z][A-Za-z0-9_.\-/]* — dots, dashes and slashes are part of ONE
 # flat key name ($key-dash, $kubernetes.labels), not navigation
@@ -91,22 +93,29 @@ def compile_path(
             raise ValueError(f"capture ref ${ref} with no captures in scope")
         return captures[ref]
 
-    if body_map is not None:
-        c = F.try_element_at(F.col(body_map), F.lit(p.root))
-    else:
-        # backtick-quote so a dot inside the key name stays a flat column
-        # reference, not struct navigation
-        c = F.col(f"`{p.root}`" if "." in p.root else p.root)
+    if body_map is None:
+        return F.expr(struct_path_sql(p))
+    c = F.try_element_at(F.col(body_map), F.lit(p.root))
     for s in p.subs:
-        # try_element_at, not element_at: ANSI mode throws on missing
-        # keys / out-of-range indexes, but the reference returns
-        # "no result" (record_accessor.c array_index_overflow,
-        # nonexistent_key_access tests) — i.e. NULL here
-        if isinstance(s, int):
-            # RA array index is 0-based; element_at is 1-based
-            c = F.try_element_at(c, F.lit(s + 1))
-        else:
-            c = c.getField(s) if body_map is None else F.try_element_at(c, F.lit(s))
+        # try_element_at: see struct_path_sql
+        c = F.try_element_at(c, F.lit(s + 1 if isinstance(s, int) else s))
+    return c
+
+
+def struct_path_sql(p: ParsedPath) -> str:
+    """A plain-key path against a fixed-schema frame, as SQL text.
+
+    The root is backtick-quoted when it holds a dot, so the dot stays
+    part of one flat column name, not struct navigation. try_element_at,
+    not element_at: ANSI mode throws on out-of-range indexes, but the
+    reference returns "no result" (record_accessor.c
+    array_index_overflow, nonexistent_key_access tests) — i.e. NULL here.
+    A string subscript is ``c['sub']``, the extract-value that
+    ``Column.getField`` builds."""
+    c = sql_ident(p.root) if "." in p.root else sql_col(p.root)
+    for s in p.subs:
+        # RA array index is 0-based; element_at is 1-based
+        c = f"try_element_at({c}, {s + 1})" if isinstance(s, int) else f"{c}[{sql_str(s)}]"
     return c
 
 

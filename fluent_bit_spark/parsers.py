@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .sqltext import sql_col, sql_ident, sql_str
 from .timefmt import parse_time
 
 # ---------------------------------------------------------------------------
@@ -278,12 +279,10 @@ class RegexParser:
         JVM regex returns "" for both.
         """
         names = self.group_names()
-        src = F.col(source_col)
-
         if self.skip_empty_values:
-            df, cols = self._jvm_extract(df, src, names)
+            df, cols = self._jvm_extract(df, sql_col(source_col), names)
         else:
-            cols = self._pandas_extract(src, names)
+            df, cols = self._pandas_extract(df, source_col, names)
 
         return self.finish(
             df, cols, ts_col=ts_col, prefix=prefix, assume_year=assume_year
@@ -292,7 +291,7 @@ class RegexParser:
     def finish(
         self,
         df: DataFrame,
-        cols: dict[str, Column],
+        cols: dict[str, str],
         *,
         ts_col: str = "__parsed_ts",
         prefix: str = "",
@@ -302,37 +301,43 @@ class RegexParser:
         (cb_results time_key branch), type casts, column projection.
         Shared by both extraction paths and by the fused extraction+parse
         path (webtext.extract_parse_arrow), whose group columns arrive as
-        real columns rather than expressions."""
+        real columns rather than expressions.
+
+        ``cols`` maps each group name to its value as SQL text. The
+        output is one projection (plus the drop of the ``__fb_parts``
+        helper): a group column that already holds its value under its
+        output name is left as it is. Per-column ``withColumn`` calls
+        each added a plan node that Spark analyses again, nine of them
+        no-ops on the fused path."""
         names = self.group_names()
-        out = df
         if self.time_fmt is not None and self.time_key in names:
-            tcol = cols[self.time_key]
             out_ts = parse_time(
-                tcol, self.time_fmt, assume_year=assume_year, time_offset=self.time_offset
+                F.expr(cols[self.time_key]), self.time_fmt,
+                assume_year=assume_year, time_offset=self.time_offset,
             )
             if not self.time_keep:
-                cols = dict(cols)
-                cols.pop(self.time_key)
+                cols = {nm: c for nm, c in cols.items() if nm != self.time_key}
         else:
-            out_ts = F.lit(None).cast("timestamp")
+            out_ts = F.expr("CAST(NULL AS TIMESTAMP)")
 
         casts = {t.key: t for t in self.types}
+        new: dict[str, Column] = {}
         for nm, c in cols.items():
             if nm in casts:
-                c = casts[nm].apply(c)
-            out = out.withColumn(prefix + nm, c)
-        out = out.withColumn(ts_col, out_ts)
-        if "__fb_parts" in out.columns:
-            out = out.drop("__fb_parts")
-        return out
+                new[prefix + nm] = casts[nm].apply(F.expr(c))
+            elif c != sql_ident(prefix + nm):
+                new[prefix + nm] = F.expr(c)
+        new[ts_col] = out_ts
+        out = df.withColumns(new)
+        return out.drop("__fb_parts") if "__fb_parts" in df.columns else out
 
     # ASCII record separator: never a regex metachar, vanishingly rare in
     # log text; rows containing it take the per-group fallback path.
     _SEP = "\x1e"
 
     def _jvm_extract(
-        self, df: DataFrame, src: Column, names: list[str]
-    ) -> tuple[DataFrame, dict[str, Column]]:
+        self, df: DataFrame, src: str, names: list[str]
+    ) -> tuple[DataFrame, dict[str, str]]:
         """All capture groups in ONE regex pass.
 
         An anchored pattern is rewritten into a regexp_replace whose
@@ -349,42 +354,46 @@ class RegexParser:
         Rows containing the sentinel fall back lazily to per-group
         extraction; non-anchored patterns always use the per-group path.
         ""-captures (empty or non-participating) become NULL: the
-        skip_empty_values key-drop this path is chosen for.
+        skip_empty_values key-drop this path is chosen for. ``src`` and
+        the returned group values are SQL text.
         """
         stripped, name_to_idx = strip_names(self.regex)
-        row_matches = src.rlike(stripped)
+        rx = sql_str(stripped)
 
-        def slow(nm: str) -> Column:
-            return F.when(row_matches, F.regexp_extract(src, stripped, name_to_idx[nm]))
+        def slow(nm: str) -> str:
+            return (
+                f"CASE WHEN {src} RLIKE {rx}"
+                f" THEN regexp_extract({src}, {rx}, {name_to_idx[nm]}) END"
+            )
 
         anchored = stripped.startswith("^") and stripped.endswith("$")
-        cols: dict[str, Column] = {}
+        cols: dict[str, str] = {}
         if anchored and len(names) > 1:
-            repl = self._SEP.join(f"${name_to_idx[nm]}" for nm in names)
-            packed = F.regexp_replace(src, stripped, repl)
-            df = df.withColumn("__fb_parts", F.split(packed, self._SEP, -1))
-            parts = F.col("__fb_parts")
-            has_sep = src.contains(self._SEP)
+            sep = sql_str(self._SEP)
+            repl = sql_str(self._SEP.join(f"${name_to_idx[nm]}" for nm in names))
+            df = df.withColumn(
+                "__fb_parts", F.expr(f"split(regexp_replace({src}, {rx}, {repl}), {sep}, -1)")
+            )
             for j, nm in enumerate(names):
                 # unmatched sentinel-free line -> 1 part: try_element_at
                 # (ANSI-safe) gives null past the end; field 0 needs the
                 # match gate
-                fast = F.try_element_at(parts, F.lit(j + 1))
+                fast = f"try_element_at(`__fb_parts`, {j + 1})"
                 if j == 0:
-                    fast = F.when(F.size(parts) == len(names), fast)
-                cols[nm] = F.when(has_sep, slow(nm)).otherwise(fast)
+                    fast = f"CASE WHEN size(`__fb_parts`) = {len(names)} THEN {fast} END"
+                cols[nm] = f"CASE WHEN contains({src}, {sep}) THEN {slow(nm)} ELSE {fast} END"
         else:
-            for nm in names:
-                cols[nm] = slow(nm)
-        cols = {
-            nm: F.when(c == "", F.lit(None)).otherwise(c) for nm, c in cols.items()
-        }
-        return df, cols
+            cols = {nm: slow(nm) for nm in names}
+        return df, {nm: f"CASE WHEN {c} = '' THEN NULL ELSE {c} END" for nm, c in cols.items()}
 
-    def _pandas_extract(self, src: Column, names: list[str]) -> dict[str, Column]:
+    def _pandas_extract(
+        self, df: DataFrame, source_col: str, names: list[str]
+    ) -> tuple[DataFrame, dict[str, str]]:
         """skip_empty_values=false: python re reports a non-participating
         group as NaN (-> NULL) and an empty capture as "", the reference's
-        key-absent vs empty-value distinction."""
+        key-absent vs empty-value distinction. The UDF's struct lands in
+        the ``__fb_parts`` helper column; the group values are its
+        fields, as SQL text."""
         pat = onig_to_python(self.regex)
         fields = ", ".join(f"`{n}` string" for n in names)
 
@@ -394,8 +403,8 @@ class RegexParser:
             res = s.str.extract(rx, expand=True)
             return res.reindex(columns=names)
 
-        struct = extract(src)
-        return {n: struct.getField(n) for n in names}
+        df = df.withColumn("__fb_parts", extract(F.col(source_col)))
+        return df, {n: f"`__fb_parts`.{sql_ident(n)}" for n in names}
 
 
 @dataclass(frozen=True)

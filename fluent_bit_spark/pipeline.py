@@ -42,9 +42,10 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .enrich import dict_enrich, geoip_enrich, literal_map_enrich
+from .enrich import dict_enrich, geoip_enrich, literal_map_columns
 from .parsers import APACHE
 from .router import RouteCondition, RewriteTagRule, SinkSpec, apply_rewrite_tag, route_flags
+from .sqltext import sql_str
 from .webgen import geo_dict, lang_dict
 
 DEFAULT_SINKS = (
@@ -138,21 +139,21 @@ def filter_stage(df: DataFrame) -> DataFrame:
     predicate: Structured Streaming rejects non-deterministic filter
     expressions, and a microbatch's pushed predicate re-evaluates the
     same chain either way — the pin is a batch-plan optimization."""
-    keep = F.coalesce(F.col("code").rlike(r"^\d+$"), F.lit(False))
-    if df.isStreaming:
-        df = df.filter(keep)
-    else:
-        df = df.filter(keep | (F.monotonically_increasing_id() < F.lit(0)))
+    digits = sql_str(r"^\d+$")
+    keep = f"coalesce(`code` RLIKE {digits}, FALSE)"
+    if not df.isStreaming:
+        keep += " OR monotonically_increasing_id() < 0"
     # Apache logs write '-' for bodyless responses: try_cast maps it to
     # null (big_transfers treats null as not-big) instead of throwing
-    df = df.withColumn("size_i", F.col("size").try_cast("long"))
-    code_class = (
-        F.when(F.col("code").startswith("2"), "ok")
-        .when(F.col("code").startswith("3"), "redirect")
-        .when(F.col("code").startswith("4"), "client_error")
-        .otherwise("server_error")
-    )
-    return df.withColumn("code_class", code_class)
+    return df.filter(F.expr(keep)).withColumns({
+        "size_i": F.expr("try_cast(`size` AS BIGINT)"),
+        "code_class": F.expr(
+            "CASE WHEN startswith(`code`, '2') THEN 'ok'"
+            " WHEN startswith(`code`, '3') THEN 'redirect'"
+            " WHEN startswith(`code`, '4') THEN 'client_error'"
+            " ELSE 'server_error' END"
+        ),
+    })
 
 
 def load_enrich_dims(
@@ -193,18 +194,20 @@ def enrich_stage(
     geo_rows, lang_rows = dims if dims is not None else load_enrich_dims(
         geo, langs, literal_threshold
     )
+    # both literal dimensions land in one projection
+    lookups = {}
     if len(geo_rows) <= literal_threshold:
-        df = literal_map_enrich(
-            df, geo_rows, "host",
-            ["country", "city"], key_extract=r"^(\d+)\.",
+        lookups = literal_map_columns(
+            geo_rows, "host", ["country", "city"], key_extract=r"^(\d+)\.",
         )
     else:
         df = geoip_enrich(df, geo, lookup_key="host")
     if len(lang_rows) <= literal_threshold:
-        df = literal_map_enrich(df, lang_rows, "lang", ["lang_name", "family"])
-    else:
-        df = dict_enrich(df, langs, on="lang")
-    return df
+        lookups.update(literal_map_columns(lang_rows, "lang", ["lang_name", "family"]))
+        return df.withColumns(lookups)
+    if lookups:
+        df = df.withColumns(lookups)
+    return dict_enrich(df, langs, on="lang")
 
 
 def tag_stage(df: DataFrame) -> DataFrame:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from .jsonesc import fb_json_body
 from .parsers import atof_double
 from .semantics import FBVal, fb_compare, fb_and, fb_or, fb_type_of
+from .sqltext import sql_col, sql_ident, sql_str
 
 # ---------------------------------------------------------------------------
 # Tag glob
@@ -73,19 +74,30 @@ def tag_matches(pattern: str) -> Callable[[str], bool]:
     return lambda tag: tag is not None and rx.match(tag) is not None
 
 
-def match_col(tag_col: Column, pattern: Optional[str], regex: Optional[str] = None) -> Column:
-    """Predicate Column: does the tag match this sink?
+def _match_regex(pattern: Optional[str], regex: Optional[str]) -> Optional[str]:
+    """The anchored regex a sink's Match / Match_Regex compiles to; None
+    never matches (a NULL match never routes, router.c:83-85).
 
     ``regex`` mirrors Match_Regex: Onigmo ``onig_match`` anchors at the
     start only (src/flb_router.c:70-75), hence the leading ``^`` without a
-    trailing ``$``.
-    """
+    trailing ``$``."""
     if regex is not None:
-        r = regex if regex.startswith("^") else "^(?:" + regex + ")"
-        return F.coalesce(tag_col.rlike(r), F.lit(False))
-    if pattern is None:
-        return F.lit(False)  # NULL match never routes (router.c:83-85)
-    return F.coalesce(tag_col.rlike(glob_to_regex(pattern)), F.lit(False))
+        return regex if regex.startswith("^") else "^(?:" + regex + ")"
+    return None if pattern is None else glob_to_regex(pattern)
+
+
+def match_col(tag_col: Column, pattern: Optional[str], regex: Optional[str] = None) -> Column:
+    """Predicate Column: does the tag match this sink?"""
+    rx = _match_regex(pattern, regex)
+    if rx is None:
+        return F.lit(False)
+    return F.coalesce(tag_col.rlike(rx), F.lit(False))
+
+
+def match_sql(tag_sql: str, pattern: Optional[str], regex: Optional[str] = None) -> str:
+    """:func:`match_col` as SQL text over the tag expression ``tag_sql``."""
+    rx = _match_regex(pattern, regex)
+    return "FALSE" if rx is None else f"coalesce({tag_sql} RLIKE {sql_str(rx)}, FALSE)"
 
 
 # ---------------------------------------------------------------------------
@@ -224,7 +236,7 @@ class SinkSpec:
     json_date_key: str = "date"
 
     def predicate(self, df: DataFrame, tag_col: str = "tag") -> Column:
-        p = match_col(F.col(tag_col), self.match, self.match_regex)
+        p = F.expr(match_sql(sql_col(tag_col), self.match, self.match_regex))
         if self.conditions:
             conds = [c.to_column(df) for c in self.conditions]
             acc = conds[0]
@@ -266,21 +278,23 @@ _TMPL_TOKEN = re.compile(
 )
 
 
-def _compile_template(tmpl: str, tag_col: Column, captures: dict[int, Column]) -> Column:
-    from .accessor import compile_path
+def _compile_template(tmpl: str, tag_sql: str, captures: dict[int, str]) -> str:
+    """The new-tag template as SQL text over the tag expression
+    ``tag_sql`` and the capture-group expressions ``captures``."""
+    from .accessor import parse_path, struct_path_sql
 
-    parts: list[Column] = []
+    parts: list[str] = []
     pos = 0
     for m in _TMPL_TOKEN.finditer(tmpl):
         if m.start() > pos:
-            parts.append(F.lit(tmpl[pos : m.start()]))
+            parts.append(sql_str(tmpl[pos : m.start()]))
         if m.group(0).startswith("$TAG"):
             if m.group(1) is not None:
-                n = int(m.group(1))
                 # $TAG[n]: tag split on '.' (ra.l:46, flb_ra_parser tag part)
-                parts.append(F.split(tag_col, r"\.").getItem(n))
+                dot = sql_str(r"\.")
+                parts.append(f"split({tag_sql}, {dot})[{int(m.group(1))}]")
             else:
-                parts.append(tag_col)
+                parts.append(tag_sql)
         elif m.group(2) is not None:
             parts.append(captures[int(m.group(2))])
         else:
@@ -288,14 +302,14 @@ def _compile_template(tmpl: str, tag_col: Column, captures: dict[int, Column]) -
             # (check=FALSE, flb_record_accessor.c:628-668) keeps going
             # when a key lookup fails — concat of a NULL would null the
             # whole tag otherwise
-            ref = compile_path(m.group(3))
-            parts.append(F.coalesce(ref.cast("string"), F.lit("")))
+            ref = struct_path_sql(parse_path(m.group(3)))
+            parts.append(f"coalesce(CAST({ref} AS STRING), '')")
         pos = m.end()
     if pos < len(tmpl):
-        parts.append(F.lit(tmpl[pos:]))
+        parts.append(sql_str(tmpl[pos:]))
     if not parts:
-        return F.lit("")
-    return F.concat(*parts)
+        return "''"
+    return f"concat({', '.join(parts)})"
 
 
 def apply_rewrite_tag(
@@ -330,18 +344,23 @@ def _apply_rewrite_tag_once(
 ) -> DataFrame:
     if not rules:
         return df
-    tag = F.col(tag_col)
-    new_tag = None  # Column: rewritten tag or NULL if no rule matched
-    keep_flag = F.lit(False)
-    matched_any = F.lit(False)
+    # First matching rule wins: CASE tries the rules in order. The new
+    # tag is NULL when no rule matched (or its template is NULL).
+    tag = sql_col(tag_col)
+    tag_cases, keep_cases = [], []
     for r in rules:
-        val = F.col(r.key).cast("string")
-        hit = F.coalesce(val.rlike(r.regex), F.lit(False)) & ~matched_any
-        caps = {i: F.regexp_extract(val, r.regex, i) for i in range(10) if f"${i}" in r.new_tag}
-        tcol = _compile_template(r.new_tag, tag, caps)
-        new_tag = F.when(hit, tcol) if new_tag is None else new_tag.when(hit, tcol)
-        keep_flag = F.when(hit, F.lit(r.keep)).otherwise(keep_flag)
-        matched_any = matched_any | hit
+        val = f"CAST({sql_col(r.key)} AS STRING)"
+        rx = sql_str(r.regex)
+        hit = f"coalesce({val} RLIKE {rx}, FALSE)"
+        caps = {
+            i: f"regexp_extract({val}, {rx}, {i})"
+            for i in range(10)
+            if f"${i}" in r.new_tag
+        }
+        tag_cases.append(f"WHEN {hit} THEN {_compile_template(r.new_tag, tag, caps)}")
+        keep_cases.append(f"WHEN {hit} THEN {'TRUE' if r.keep else 'FALSE'}")
+    new_tag = f"CASE {' '.join(tag_cases)} END"
+    keep = f"CASE {' '.join(keep_cases)} ELSE FALSE END"
 
     # Single-pass emit via explode: per record the set of output tags is
     #   matched & keep  -> [original, rewritten]   (emitter re-injection copy)
@@ -351,18 +370,20 @@ def _apply_rewrite_tag_once(
     # per side (fresh expr ids, no ReusedExchange — the dedup
     # self_join_ready lesson); with the html-extraction pipeline upstream
     # that union was a measured 2x on webgen_e2e. Generate(explode) keeps
-    # one pass and stays inside whole-stage codegen.
+    # one pass and stays inside whole-stage codegen. One projection keeps
+    # every column in place and explodes the tag where it stands.
     out_tags = (
-        F.when(new_tag.isNotNull() & keep_flag, F.array(tag, new_tag))
-        .when(new_tag.isNotNull(), F.array(new_tag))
-        .otherwise(F.array(tag))
+        f"CASE WHEN {new_tag} IS NOT NULL AND {keep} THEN array({tag}, {new_tag})"
+        f" WHEN {new_tag} IS NOT NULL THEN array({new_tag})"
+        f" ELSE array({tag}) END"
     )
-    rewritten = df.withColumn("__out_tags", out_tags)
-    return (
-        rewritten.withColumn(tag_col, F.explode(F.col("__out_tags")))
-        .drop("__out_tags")
-        .select(*df.columns)
-    )
+    cols = df.columns
+    if tag_col not in cols:
+        raise ValueError(f"rewrite_tag: no tag column {tag_col!r} in {cols}")
+    return df.selectExpr(*[
+        f"explode({out_tags}) AS {sql_ident(c)}" if c == tag_col else sql_ident(c)
+        for c in cols
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -374,10 +395,7 @@ def route_flags(df: DataFrame, sinks: Sequence[SinkSpec], tag_col: str = "tag") 
     """Attach one boolean predicate column per sink (``__route_<name>``) —
     the Spark analogue of the chunk routes bitmask. Catalyst computes all
     predicates in one pass over the cached upstream."""
-    out = df
-    for s in sinks:
-        out = out.withColumn(f"__route_{s.name}", s.predicate(df, tag_col))
-    return out
+    return df.withColumns({f"__route_{s.name}": s.predicate(df, tag_col) for s in sinks})
 
 
 def write_sinks(

@@ -58,6 +58,7 @@ from pyspark.sql import types as T
 
 from .. import fbrecord
 from ..router import glob_to_regex
+from ..sqltext import sql_ident
 from ..semantics import (
     FB_BOOL,
     FB_FLOAT,
@@ -418,12 +419,15 @@ class SPEngine:
             # source stays fully parallel (a global window would funnel
             # the whole FROM source through one task at scale)
             newest = df.agg(F.max(F.col(self.ts_col)).alias("__newest"))
+            epoch = _epoch_seconds(
+                next((f.dataType for f in df.schema if f.name == self.ts_col), None)
+            )
             df = (
                 df.crossJoin(F.broadcast(newest))
-                .filter(
-                    F.col(self.ts_col).cast("timestamp").cast("double")
-                    > F.col("__newest").cast("timestamp").cast("double") - seconds
-                )
+                .filter(F.expr(
+                    f"{epoch.format(sql_ident(self.ts_col))}"
+                    f" > {epoch.format('__newest')} - {seconds}"
+                ))
                 .drop("__newest")
             )
         if record_limit:
@@ -536,11 +540,6 @@ def _execute_projection(q, df, b, mode, body_col, now_ts) -> DataFrame:
 _PANE_FUNCS = {"COUNT", "SUM", "MIN", "MAX", "AVG"}
 
 
-def _ident(name: str) -> str:
-    """A column name quoted for SQL text (keys may hold '-' or '.')."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _seconds_codec(dtype):
     """(to epoch seconds, from epoch seconds) SQL templates for a
     timestamp type, on the clock F.window buckets: the UTC instant of a
@@ -562,7 +561,23 @@ def _seconds_codec(dtype):
     return None
 
 
-def _agg(k: SelectKey, n: Optional[Column], ts_col: Optional[str] = None) -> Column:
+def _epoch_seconds(dtype) -> str:
+    """SQL template: a record time as DOUBLE epoch seconds, fraction
+    kept. A TIMESTAMP_NTZ is read on its wall clock through an NTZ - NTZ
+    interval, as in _seconds_codec: a cast to TIMESTAMP would read it in
+    the session time zone, where the wall times of a DST gap collapse
+    (America/New_York: 02:30 and 03:30 on 2024-03-10 both gave
+    1710055800). DECIMAL(18, 6) holds every microsecond of years
+    1-9999. Other types cast to TIMESTAMP first."""
+    if isinstance(dtype, T.TimestampNTZType):
+        return (
+            "CAST(CAST({} - TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+            " AS DECIMAL(18, 6)) AS DOUBLE)"
+        )
+    return "CAST(CAST({} AS TIMESTAMP) AS DOUBLE)"
+
+
+def _agg(k: SelectKey, n: Optional[Column], x: Optional[Column] = None) -> Column:
     """One aggregate over a group's records, named as selected."""
     if k.func == "COUNT":
         # COUNT(key) == COUNT(*) (flb_sp_aggregate_func.c:199-205)
@@ -582,9 +597,7 @@ def _agg(k: SelectKey, n: Optional[Column], ts_col: Optional[str] = None) -> Col
     # raw-moment form: x is epoch seconds (~1.7e9) and avg(x*x)-avg(x)^2
     # cancels catastrophically in doubles. Centered prediction
     # avg(y) + b1*((max(x)-avg(x)) + t) avoids the same in b0.
-    # NTZ-safe epoch double (parquet timestamps read as TIMESTAMP_NTZ
-    # cannot cast straight to double); session tz is UTC in tests
-    x = F.col(ts_col).cast("timestamp").cast("double")
+    # x is the record time in epoch seconds (_epoch_seconds)
     b1 = F.try_divide(F.covar_pop(x, n), F.var_pop(x))
     forecast = F.avg(n) + b1 * ((F.max(x) - F.avg(x)) + F.lit(float(k.forecast_offset)))
     return forecast.alias(k.out_name)
@@ -623,8 +636,8 @@ def _pane_aggregate(df, win, secs, groups, measures, flags):
         else:
             partial.append(getattr(F, k.func.lower())(n).alias(m))
             total = f"{k.func.lower()}({m})"
-        rollup.append(F.expr(f"{total} AS {_ident(k.out_name)}"))
-    rollup += [F.expr(f"min({_ident(name)}) AS {_ident(name)}") for name in flags]
+        rollup.append(F.expr(f"{total} AS {sql_ident(k.out_name)}"))
+    rollup += [F.expr(f"min({sql_ident(name)}) AS {sql_ident(name)}") for name in flags]
     last = f"__p - pmod(__p, {adv}L)"
     first = f"{last} - {(-(-size // adv) - 1) * adv}L"
     starts = f"filter(sequence({first}, {last}, {adv}L), s -> s > __p - {size}L)"
@@ -666,11 +679,14 @@ def _execute_aggregate(q, df, b, mode, ts_col) -> DataFrame:
         if k.func in AGG_FUNCS
     ]
 
+    def ts_type():
+        schema = b.schema if mode == "static" else df.schema
+        return next((f.dataType for f in schema if f.name == ts_col), None)
+
     codec = None
     if q.window is not None and all(k.func in _PANE_FUNCS for k, _ in measures) \
             and not df.isStreaming:
-        schema = b.schema if mode == "static" else df.schema
-        codec = _seconds_codec(next((f.dataType for f in schema if f.name == ts_col), None))
+        codec = _seconds_codec(ts_type())
     if codec is not None:
         keep.append(F.col(ts_col).isNotNull())  # F.window drops null times
     if keep:
@@ -679,7 +695,7 @@ def _execute_aggregate(q, df, b, mode, ts_col) -> DataFrame:
     window_cols = []
     if codec is not None:
         to_s, from_s = codec
-        secs = to_s.format(_ident(ts_col))
+        secs = to_s.format(sql_ident(ts_col))
         out = _pane_aggregate(df, q.window, secs, groups, measures, flags)
         window_cols = [
             F.expr(f"{from_s.format('__ws')} AS window_start"),
@@ -698,8 +714,11 @@ def _execute_aggregate(q, df, b, mode, ts_col) -> DataFrame:
                 F.col("__w.start").alias("window_start"),
                 F.col("__w.end").alias("window_end"),
             ]
+        x = None
+        if any(k.func == "TIMESERIES_FORECAST" for k, _ in measures):
+            x = F.expr(_epoch_seconds(ts_type()).format(sql_ident(ts_col)))
         out = df.groupBy(*keys).agg(
-            *[_agg(k, n, ts_col) for k, n in measures],
+            *[_agg(k, n, x) for k, n in measures],
             *[c.alias(name) for name, c in flags.items()],
         )
 

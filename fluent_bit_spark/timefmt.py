@@ -27,6 +27,8 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import sql_map
+
 # Composite tokens expand to their POSIX definitions before translation
 # (flb_strptime.c handles these recursively: %D %F %R %r %T %h, :306-356).
 _COMPOSITE = {
@@ -215,11 +217,12 @@ def _normalize_zone(s: Column, kind: str) -> Column:
     All regexp/map work is plain codegen scalar expressions.
     """
     table = _KNOWN_ZONES if kind == "Z" else _Z_LOWER_NAMES
-    entries: list[Column] = []
-    for name, off in sorted(table.items()):
-        entries.append(F.lit(name))
-        entries.append(F.lit(off if isinstance(off, str) else _offset_str(off)))
-    zmap = F.create_map(*entries)
+    # one SQL map literal: an F.create_map of F.lit pairs costs two Py4J
+    # calls per zone on every parser build
+    zmap = F.expr(sql_map(
+        (name, off if isinstance(off, str) else _offset_str(off))
+        for name, off in sorted(table.items())
+    ))
     tok = F.regexp_extract(s, r"([A-Za-z]{1,5})\s*$", 1)
     off = F.try_element_at(zmap, F.upper(tok))
     prefix = F.regexp_extract(s, r"^(.*?)[A-Za-z]{1,5}\s*$", 1)

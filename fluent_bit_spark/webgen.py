@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sqltext import sql_str
+
 N_DOMAINS = 500
 LANGS = ["en", "en", "en", "en", "es", "de", "fr", "zh", "pt", "ru"]  # en-heavy
 METHODS = ["GET", "GET", "GET", "GET", "POST", "PUT", "HEAD"]
@@ -38,9 +40,17 @@ def _h(seed: int, *cols) -> "F.Column":
     return F.abs(F.xxhash64(F.lit(seed), *cols))
 
 
-def _pick(options: list[str], seed: int, id_col) -> "F.Column":
-    arr = F.array(*[F.lit(o) for o in options])
-    return F.element_at(arr, (_h(seed, id_col) % len(options) + 1).cast("int"))
+def _pick_sql(options: list[str], seed: int) -> str:
+    """SQL text: the option that row ``id``'s seeded hash picks."""
+    arr = ", ".join(sql_str(o) for o in options)
+    return (
+        f"element_at(array({arr}),"
+        f" CAST(abs(xxhash64({seed}, id)) % {len(options)} + 1 AS INT))"
+    )
+
+
+def _pick(options: list[str], seed: int) -> "F.Column":
+    return F.expr(_pick_sql(options, seed))
 
 
 def generate(
@@ -59,11 +69,11 @@ def generate(
     rank = F.least(F.floor(F.pow(u, F.lit(-1.0 / 1.2))), F.lit(N_DOMAINS)).cast("long")
     domain = F.concat(F.lit("d"), rank, F.lit(".example.com"))
 
-    lang = _pick(LANGS, 2, i)
-    method = _pick(METHODS, 3, i)
-    path = _pick(PATHS, 4, i)
-    code = _pick(CODES, 5, i)
-    agent = _pick(AGENTS, 6, i)
+    lang = _pick(LANGS, 2)
+    method = _pick(METHODS, 3)
+    path = _pick(PATHS, 4)
+    code = _pick(CODES, 5)
+    agent = _pick(AGENTS, 6)
     size = (_h(7, i) % 90000 + 100).cast("string")
     host_ip = F.concat_ws(
         ".",
@@ -72,7 +82,7 @@ def generate(
         (_h(10, i) % 255).cast("string"),
         (_h(11, i) % 255).cast("string"),
     )
-    user = F.when(_h(12, i) % 5 == 0, _pick(["alice", "bob", "carol"], 13, i)).otherwise(
+    user = F.when(_h(12, i) % 5 == 0, _pick(["alice", "bob", "carol"], 13)).otherwise(
         F.lit("-")
     )
     # deterministic timestamp ramp, 1 row/second from a fixed base
@@ -95,8 +105,8 @@ def generate(
         method, F.lit(" "), path, F.lit(' HTTP/1.1" '), code, F.lit(" "), size, tail,
     )
 
-    filler1 = F.concat_ws(" ", *[_pick(WORDS, 20 + k, i) for k in range(8)])
-    filler2 = F.concat_ws(" ", *[_pick(WORDS, 40 + k, i) for k in range(6)])
+    filler1 = F.concat_ws(" ", *[_pick(WORDS, 20 + k) for k in range(8)])
+    filler2 = F.concat_ws(" ", *[_pick(WORDS, 40 + k) for k in range(6)])
     text = F.concat(filler1, F.lit("\nLOG "), log_line, F.lit("\n"), filler2)
 
     url = F.concat(
@@ -143,14 +153,14 @@ def generate(
 def geo_dict(spark: SparkSession, n: int = 1000) -> DataFrame:
     """Broadcast-side geo dimension (stands in for the MaxMind MMDB of
     plugins/filter_geoip2/geoip2.c:45-110): first-octet prefix -> geo."""
-    df = spark.range(1, 224)
     countries = ["US", "DE", "FR", "BR", "JP", "IN", "GB", "CN"]
     cities = ["nyc", "berlin", "paris", "sao-paulo", "tokyo", "mumbai", "london", "beijing"]
-    i = F.col("id")
-    return df.select(
-        i.cast("string").alias("ip_prefix"),
-        _pick(countries, 101, i).alias("country"),
-        _pick(cities, 102, i).alias("city"),
+    # SQL text, one selectExpr: this runs on every pipeline build, and
+    # the same picks as Column calls cost ~250 Py4J round trips
+    return spark.range(1, 224).selectExpr(
+        "CAST(id AS STRING) AS ip_prefix",
+        f"{_pick_sql(countries, 101)} AS country",
+        f"{_pick_sql(cities, 102)} AS city",
     )
 
 

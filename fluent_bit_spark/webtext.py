@@ -63,6 +63,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sqltext import sql_ident
+
 # ---------------------------------------------------------------------------
 # The normative extraction sequence: (pattern, replacement) pairs applied
 # in order. Patterns are valid and equivalent in java.util.regex (Spark),
@@ -437,8 +439,9 @@ def extract_parse_arrow(
             yield pa.RecordBatch.from_arrays(arrays, names=names_out)
 
     out = df.mapInArrow(run, schema=out_schema)
-    cols = {nm: F.col(nm) for nm in names}
-    out = parser.finish(out, cols, ts_col=ts_col, assume_year=assume_year)
+    out = parser.finish(
+        out, {nm: sql_ident(nm) for nm in names}, ts_col=ts_col, assume_year=assume_year
+    )
     if parser.time_fmt is not None and not parser.time_keep and parser.time_key in names:
         out = out.drop(parser.time_key)
     return out

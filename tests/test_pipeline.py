@@ -161,3 +161,121 @@ def test_removed_engines_fail_loudly(spark, tmp_path):
     )
     assert proc.returncode == 2
     assert "invalid choice: 'pandas'" in proc.stderr
+
+
+# ---------------------------------------------------------------------------
+# Plan-construction guards for the parse -> route chain
+# ---------------------------------------------------------------------------
+
+from fluent_bit_spark.pipeline import (  # noqa: E402
+    enrich_stage,
+    extract_parse_stage,
+    filter_stage,
+    load_enrich_dims,
+    tag_stage,
+)
+from fluent_bit_spark.router import route_flags  # noqa: E402
+from fluent_bit_spark.webgen import geo_dict, lang_dict  # noqa: E402
+
+# Per-stage output columns: (name, type), nullable unless marked "!".
+_STAGE_COLUMNS = {
+    "parse": [
+        "url string", "warc_ts timestamp", "text string", "lang string",
+        "text_extracted string", "title string", "n_links int", "line string",
+        "host string", "user string", "method string", "path string",
+        "code string", "size string", "referer string", "agent string",
+        "log_ts timestamp",
+    ],
+    "filter": ["size_i bigint", "code_class string!"],
+    "enrich": ["country string", "city string", "lang_name string", "family string"],
+    "tag": ["tag string"],
+    "route": [f"__route_{s.name} boolean!" for s in DEFAULT_SINKS],
+}
+
+
+def _chain(spark, pages, dims):
+    parsed = extract_parse_stage(pages)
+    kept = filter_stage(parsed)
+    enriched = enrich_stage(kept, geo_dict(spark), lang_dict(spark), dims=dims)
+    tagged = tag_stage(enriched)
+    return {
+        "parse": parsed, "filter": kept, "enrich": enriched, "tag": tagged,
+        "route": route_flags(tagged, DEFAULT_SINKS),
+    }
+
+
+@pytest.fixture(scope="module")
+def small_pages(spark):
+    return generate(spark, 200, partitions=2)
+
+
+@pytest.fixture(scope="module")
+def dims(spark):
+    return load_enrich_dims(geo_dict(spark), lang_dict(spark))
+
+
+def test_stage_schemas_pinned(spark, small_pages, dims):
+    """Names, order, types and nullability of every stage's output."""
+    want = []
+    for stage, frame in _chain(spark, small_pages, dims).items():
+        want += _STAGE_COLUMNS[stage]
+        got = [
+            f"{f.name} {f.dataType.simpleString()}{'' if f.nullable else '!'}"
+            for f in frame.schema
+        ]
+        assert got == want, stage
+
+
+def test_chain_plan_shape(spark, small_pages, dims, tmp_path):
+    """One Arrow crossing; the pin Filter directly above it; the
+    rewrite-tag emit a single Generate, never a Union."""
+    flagged = _chain(spark, small_pages, dims)["route"]
+    lines = flagged._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    ops = [ln.lstrip(" +-:|") for ln in lines]
+    assert sum(op.startswith("MapInArrow") for op in ops) == 1
+    assert sum(op.startswith("Generate") for op in ops) == 1
+    assert not any(op.startswith("Union") for op in ops)
+    pin = next(i for i, op in enumerate(ops) if "monotonically_increasing_id" in op)
+    assert ops[pin].startswith("Filter") and ops[pin + 1].startswith("MapInArrow")
+
+    # a streaming frame gets the plain predicate: Structured Streaming
+    # rejects a non-deterministic filter
+    small_pages.limit(10).write.parquet(str(tmp_path / "in"))
+    stream = spark.readStream.schema(small_pages.schema).parquet(str(tmp_path / "in"))
+    kept = filter_stage(extract_parse_stage(stream))
+    plan = kept._jdf.queryExecution().analyzed().toString()
+    assert "RLIKE" in plan and "monotonically_increasing_id" not in plan
+
+
+def test_chain_build_py4j_budget(spark, small_pages, dims):
+    """Building parse -> filter -> enrich -> tag -> route sends a bounded
+    number of Py4J commands. Each F.* call or Column operator costs
+    several round trips, so a builder that goes back to composing Column
+    trees call by call (or F.lit per map entry) blows the budget: the
+    Column-built chain sent ~5,450 commands, the SQL-text chain ~470
+    when this module runs alone and up to ~940 inside the whole suite.
+    Only this thread's commands count (a thread left running by another
+    test may use the same gateway client), and gc is off while counting,
+    so Python's proxy deletes stay out."""
+    import gc
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    me = threading.get_ident()
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    _chain(spark, small_pages, dims)  # warm-up: first-use JVM lookups
+    gc.disable()
+    client.send_command = counting
+    try:
+        _chain(spark, small_pages, dims)
+    finally:
+        del client.send_command
+        gc.enable()
+    assert len(sent) <= 1500, len(sent)

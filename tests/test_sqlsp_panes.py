@@ -224,3 +224,42 @@ def test_forecast_window_keeps_f_window(spark):
     assert got.keys() == {epoch, epoch + dt.timedelta(seconds=10)}
     assert got[epoch][0] == 10 and abs(got[epoch][1] - 38.0) < 1e-9
     assert abs(got[epoch + dt.timedelta(seconds=10)][1] - 58.0) < 1e-9
+
+
+def test_ntz_forecast_and_snapshot_read_the_wall_clock(spark):
+    """TIMESERIES_FORECAST's x and the WITH(seconds=...) snapshot cut
+    read a TIMESTAMP_NTZ on its wall clock: under America/New_York,
+    where 02:00-03:00 on 2024-03-10 does not exist, the results equal
+    the UTC session's (a cast through the session zone folded 02:30 and
+    03:30 onto one instant)."""
+    # one event every 450.25 s of wall clock from 00:00 to 04:30, on a
+    # line v = 2 * (wall seconds since midnight)
+    base = dt.datetime(2024, 3, 10)
+    times = [base + dt.timedelta(seconds=450.25 * j) for j in range(37)]
+    secs = [(t - base).total_seconds() for t in times]
+    rows = [(t, j % 2, 2.0 * s) for j, (t, s) in enumerate(zip(times, secs))]
+
+    def run():
+        df = spark.createDataFrame(rows, "ts timestamp_ntz, k int, v double")
+        eng = SPEngine(streams={"S": df}, mode="static")
+        fc = eng.run(
+            "SELECT k, TIMESERIES_FORECAST(v, 60) AS fc FROM STREAM:S GROUP BY k;"
+        ).collect()
+        eng.run("CREATE SNAPSHOT snap WITH(seconds='3600') AS SELECT * FROM STREAM:S;")
+        kept = eng.run("FLUSH SNAPSHOT snap AS SELECT * FROM STREAM:S;").collect()
+        return {r["k"]: r["fc"] for r in fc}, sorted(r["ts"] for r in kept)
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = run()
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        ny = run()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert ny[1] == utc[1] == [t for t in times if t > times[-1] - dt.timedelta(hours=1)]
+    assert ny[0].keys() == utc[0].keys() == {0, 1}
+    for k in (0, 1):
+        last = max(s for j, s in enumerate(secs) if j % 2 == k)
+        assert ny[0][k] == pytest.approx(utc[0][k], rel=1e-12)
+        assert utc[0][k] == pytest.approx(2.0 * (last + 60), rel=1e-9)
