@@ -287,6 +287,37 @@ def _make_arrow_decoder():
     return decode_utf8
 
 
+def _make_zip_finder_eviction():
+    """Returns the fused path's per-task zip-finder eviction, built as a
+    local function (like :func:`_make_arrow_decoder`) so the mapInArrow
+    closure serializes it by value.
+
+    A reused Python worker starts each task with PySpark's
+    ``setup_spark_files``, whose ``importlib.invalidate_caches()`` makes
+    every ``zipimporter`` in ``sys.path_importer_cache`` re-read its
+    archive's central directory: pyspark.zip, py4j and the spark-core
+    jar, ~120-220 ms per task. ``sys.path_importer_cache`` is only a
+    cache: an import that needs one of those paths rebuilds its finder
+    from ``zipimport._zip_directory_cache`` without a re-read, so
+    dropping the zip entries during one task saves the reload at the
+    next.
+    Other finders stay. A zip replaced on disk under the same path is
+    not re-read by a later task of the same worker; Spark does not
+    support overwriting a file it has added, so its own includes never
+    are."""
+
+    def evict_zip_finders():
+        import sys
+        import zipimport
+
+        cache = sys.path_importer_cache
+        for path, finder in list(cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                del cache[path]
+
+    return evict_zip_finders
+
+
 def _require_html_col(df: DataFrame, html_col: str) -> None:
     """Fail fast on a missing input column: pyarrow's
     Schema.get_field_index returns -1 for an unknown name and
@@ -349,6 +380,19 @@ def extract_parse_arrow(
     cheap codegen expressions. Byte-identical to the JVM reference path,
     ``parse_stage(extract_stage(...))`` (test_webtext fused-equivalence
     test).
+
+    Each task runs the kernel on two threads: every Arrow batch is split
+    into two halves that run at once, and the halves come back in input
+    order while the next batch computes (at most two batches in flight).
+    pyarrow compute releases the GIL, so the halves really overlap. Two
+    is fixed, not tuned: it is the two cores per task that the callers
+    already reserve by sizing ``local[K]`` at half the cores
+    (``perfbench.harness.spark_session``, ``bench.py``'s webgen session),
+    since each task also drives a Python worker; with every core slotted
+    (``local[4]`` on 4 cores) a second thread gained nothing. Before its
+    first batch a task also drops the worker's cached zip finders
+    (:func:`_make_zip_finder_eviction`), so the reused worker's next
+    task skips a ~120-220 ms archive re-read.
     """
     from .parsers import onig_to_python
 
@@ -387,10 +431,16 @@ def extract_parse_arrow(
         raise ValueError(f"line_pat needs a capturing group: {line_pat!r}")
     line_named = line_pat[: m.start()] + "(?P<l>" + line_pat[m.start() + 1 :]
     decode_utf8 = _make_arrow_decoder()
+    evict_zip_finders = _make_zip_finder_eviction()
 
     def run(batches):
+        from collections import deque
+        from concurrent.futures import ThreadPoolExecutor
+
         import pyarrow as pa
         import pyarrow.compute as pc
+
+        evict_zip_finders()
 
         # the RE2 entity/whitespace chain, captured per-closure so
         # workers need no package import beyond the serialized steps
@@ -401,7 +451,7 @@ def extract_parse_arrow(
                 a = pc.replace_substring_regex(a, pattern=pat_, replacement=rep)
             return pc.utf8_trim(a, characters=trim_chars)
 
-        for batch in batches:
+        def kernel(batch):
             idx = batch.schema.get_field_index(html_col)
             raw = batch.column(idx)
             s = decode_utf8(raw, pa, pc)  # spec step 1: lossy decode
@@ -436,7 +486,21 @@ def extract_parse_arrow(
                     g = pc.if_else(pc.equal(g, ""), pa.scalar(None, pa.string()), g)
                 names_out.append(nm)
                 arrays.append(g)
-            yield pa.RecordBatch.from_arrays(arrays, names=names_out)
+            return pa.RecordBatch.from_arrays(arrays, names=names_out)
+
+        # halves of one batch run at once while the previous batch's
+        # halves go back to the JVM: at most two batches in flight
+        with ThreadPoolExecutor(2) as pool:
+            pending = deque()
+            for batch in batches:
+                half = (batch.num_rows + 1) // 2
+                for part in (batch.slice(0, half), batch.slice(half)):
+                    if part.num_rows:
+                        pending.append(pool.submit(kernel, part))
+                while len(pending) > 2:
+                    yield pending.popleft().result()
+            while pending:
+                yield pending.popleft().result()
 
     out = df.mapInArrow(run, schema=out_schema)
     out = parser.finish(

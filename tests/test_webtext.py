@@ -2,10 +2,12 @@
 and the webgen roundtrip that proves byte-identical extracted text per
 url."""
 
+import contextlib
+
 from pyspark.sql import functions as F
 
 from fluent_bit_spark import webtext
-from fluent_bit_spark.parsers import APACHE
+from fluent_bit_spark.parsers import APACHE, RegexParser, onig_to_python
 from fluent_bit_spark.webgen import generate
 from fluent_bit_spark.webtext import extract_parse_arrow
 
@@ -97,6 +99,32 @@ def _jvm_and_fused(df, key="i"):
     return rows(jvm), rows(fused)
 
 
+def _partitioned(spark, rows, schema, sizes):
+    """rows laid out over len(sizes) partitions holding exactly
+    sizes[k] rows each, in order (a pair RDD keyed by partition id)."""
+    assert sum(sizes) == len(rows)
+    keyed, it = [], iter(rows)
+    for p, n in enumerate(sizes):
+        keyed += [(p, next(it)) for _ in range(n)]
+    rdd = spark.sparkContext.parallelize(keyed, len(sizes))
+    return spark.createDataFrame(
+        rdd.partitionBy(len(sizes), lambda p: p).values(), schema
+    )
+
+
+@contextlib.contextmanager
+def _small_arrow_batches(spark, n):
+    """Arrow batches of at most n rows inside the block, so one
+    partition is several batches and each is split into two halves."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_engines_byte_identical(spark):
     """jvm codegen chain vs the fused arrow/RE2 mapInArrow: identical
     text, title and link count on every tricky fragment, the golden
@@ -109,6 +137,20 @@ def test_engines_byte_identical(spark):
     jvm, fused = _jvm_and_fused(pages, key="url")
     assert len(jvm) == 300
     assert jvm == fused
+
+    # partitions of 0, 1 and odd numbers of rows, cut into
+    # 3-row Arrow batches: identical values, and the fused crossing
+    # keeps every partition's rows in input order
+    df = _partitioned(spark, rows, "i long, html binary", [0, 1, 7, len(rows) - 8])
+    with _small_arrow_batches(spark, 3):
+        jvm, fused = _jvm_and_fused(df)
+        assert jvm == fused
+        order = [
+            [r["i"] for r in part]
+            for part in extract_parse_arrow(df, APACHE).select("i").rdd.glom().collect()
+        ]
+    assert order == [[r["i"] for r in part] for part in df.rdd.glom().collect()]
+    assert [len(part) for part in order] == [0, 1, 7, len(rows) - 8]
 
 
 def test_extract_stage_keep_html_prunes(spark):
@@ -269,6 +311,10 @@ def test_malformed_utf8_is_lossy_not_fatal(spark):
 
     jvm, fused = _jvm_and_fused(df)
     assert jvm == fused
+    # one batch holding every row: the valid half and the invalid half
+    # of it decode on separate threads, one of them by the per-row
+    # fallback
+    assert _jvm_and_fused(df.coalesce(1)) == (jvm, fused)
     # the replacement char itself survives extraction as text
     assert "�" in jvm[1][0] and "bad" in jvm[1][0]
     # malformed title decodes lossily and doesn't poison the body
@@ -330,3 +376,67 @@ def test_normalize_url_vectors(spark):
     }
     for u, want in vectors:
         assert got[u] == want, (u, got[u], want)
+
+
+def test_fused_kernel_error_fails_the_action(spark):
+    """A kernel error on a worker thread fails the task and the action
+    (no hang, no partial result): a backreference is valid python re
+    but RE2 rejects it when the kernel compiles the parser regex."""
+    import re
+    import threading
+
+    from pyspark.errors import PythonException
+
+    bad = RegexParser("backref", r"^(?<host>\S+) \1$")
+    assert re.compile(onig_to_python(bad.regex))
+    pages = generate(spark, 40, partitions=2)
+    outcome = {}
+
+    def act():
+        try:
+            outcome["rows"] = extract_parse_arrow(pages, bad).collect()
+        except Exception as e:  # noqa: BLE001 -- asserted below
+            outcome["error"] = e
+
+    with _small_arrow_batches(spark, 7):
+        t = threading.Thread(target=act, daemon=True)
+        t.start()
+        t.join(timeout=180)
+    assert not t.is_alive(), "the action hung"
+    assert "rows" not in outcome
+    assert isinstance(outcome.get("error"), PythonException), outcome
+    assert "regular expression" in str(outcome["error"])
+
+
+def test_zip_finder_eviction(tmp_path):
+    """The per-task eviction drops every cached zipimporter, keeps every
+    other finder, and imports from the same zip still work after it."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("fbs_evict_a.py", "VALUE = 'a'\n")
+        z.writestr("fbs_evict_b.py", "VALUE = 'b'\n")
+    sys.path.insert(0, archive)
+    try:
+        assert importlib.import_module("fbs_evict_a").VALUE == "a"
+        cache = sys.path_importer_cache
+        assert isinstance(cache[archive], zipimport.zipimporter)
+        others = {
+            k: v for k, v in cache.items() if not isinstance(v, zipimport.zipimporter)
+        }
+
+        webtext._make_zip_finder_eviction()()
+
+        assert not [v for v in cache.values() if isinstance(v, zipimport.zipimporter)]
+        assert all(cache.get(k) is v for k, v in others.items())
+        assert importlib.import_module("fbs_evict_b").VALUE == "b"
+        assert isinstance(cache[archive], zipimport.zipimporter)
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        for m in ("fbs_evict_a", "fbs_evict_b"):
+            sys.modules.pop(m, None)
